@@ -5754,7 +5754,7 @@ WHERE rn = 1 AND op <> 'D'
 SELECT CASE WHEN (source_lsn // 16) % 2 = 0
             THEN 'bulk load #' || CAST(source_lsn // 16 AS VARCHAR)
        END AS stmt,
-       COUNT(*) AS n_rows, SUM(source_lsn) AS sum_lsn
+       COUNT(*) AS n_rows, CAST(SUM(source_lsn) AS BIGINT) AS sum_lsn
 FROM cl GROUP BY 1
 """,
         # z-order rewrite changes clustering only: same final-image slice

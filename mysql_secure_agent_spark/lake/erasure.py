@@ -84,10 +84,6 @@ def erase_keys(
     if not keys:
         return {"erased": True, "survivors": [], "buckets": []}
     key_df, commit = _key_frame(spark, table, keys)
-    if commit.bucket_function != "murmur3":
-        raise NotImplementedError(
-            f"driver-side bucket math for {commit.bucket_function!r} tables"
-        )
     types = dict(commit.schema)
     btypes = [types[c] for c in commit.bucket_cols]
     buckets = sorted(
@@ -174,9 +170,7 @@ def verify_erased(
         c = t.commit_at(v)
         ctypes = dict(c.schema)
         target: set[int] | None = None
-        if c.bucket_function == "murmur3" and all(
-            col in ctypes for col in c.bucket_cols
-        ):
+        if all(col in ctypes for col in c.bucket_cols):
             try:
                 target = {
                     bucket_for(

@@ -128,7 +128,6 @@ class IncrementalIndexMaintainer:
             old_commit = self.main.commit_at(cur["cursor_version"], resolve=False)
             same_layout = (
                 old_commit.n_buckets == main_commit.n_buckets
-                and old_commit.bucket_function == main_commit.bucket_function
                 and old_commit.bucket_cols == main_commit.bucket_cols
             )
             # ONE scalar-agg job over the cached changes computes both the

@@ -50,7 +50,7 @@ import os
 import re
 from typing import Any
 
-from .table import Commit, LakeTable
+from .table import LakeTable
 
 _NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
 
@@ -233,28 +233,14 @@ def fast_forward(table: LakeTable, name: str) -> dict[str, Any]:
             return {"skipped": True, "version": head.version}
         version = head.version + 1
         table._write_commit(
-            Commit(
-                version=version,
-                schema=list(bh.schema),
-                key_cols=bh.key_cols,
-                bucket_cols=bh.bucket_cols,
-                n_buckets=bh.n_buckets,
-                bucket_function=bh.bucket_function,
-                files={},
-                manifests=list(bh.manifests),
-                applied_batches=dict(bh.applied_batches),
-                applied_hwm=bh.applied_hwm,
-                changefeed_floor=bh.changefeed_floor,
-                dropped_cols=list(bh.dropped_cols),
-                renamed_cols=dict(bh.renamed_cols),
-                stats_cols=list(bh.stats_cols),
-                ddl_hwm=bh.ddl_hwm,
-                parent=head.version,
-                summary={
+            bh.successor(
+                version,
+                {
                     "operation": "fast_forward",
                     "branch": name,
                     "branch_head": bh.version,
                 },
+                parent=head.version,
             )
         )
         _write_json_atomic(
@@ -290,7 +276,6 @@ def merge_branch(table: LakeTable, name: str) -> dict[str, Any]:
             if (
                 head.n_buckets != bc.n_buckets
                 or head.bucket_cols != bc.bucket_cols
-                or head.bucket_function != bc.bucket_function
                 or head.schema != bc.schema
             ):
                 raise ValueError(
@@ -315,24 +300,9 @@ def merge_branch(table: LakeTable, name: str) -> dict[str, Any]:
             applied = dict(head.applied_batches)
             applied[batch_id] = version
             applied, hwm = table._prune_applied(applied, head.applied_hwm)
-            commit = Commit(
-                version=version,
-                schema=head.schema,
-                key_cols=head.key_cols,
-                bucket_cols=head.bucket_cols,
-                n_buckets=head.n_buckets,
-                bucket_function=head.bucket_function,
-                files={},
-                manifests=table._extend_manifests(head, version, delta),
-                applied_batches=applied,
-                applied_hwm=hwm,
-                changefeed_floor=head.changefeed_floor,
-                dropped_cols=list(head.dropped_cols),
-                renamed_cols=dict(head.renamed_cols),
-                stats_cols=list(head.stats_cols),
-                ddl_hwm=head.ddl_hwm,
-                parent=head.version,
-                summary={
+            commit = head.successor(
+                version,
+                {
                     "operation": "merge",
                     "batch_id": batch_id,
                     "cherry_picked_from": f"{name}@{v}",
@@ -340,6 +310,9 @@ def merge_branch(table: LakeTable, name: str) -> dict[str, Any]:
                     "deletes": bc.summary.get("deletes"),
                     "upserts": bc.summary.get("upserts"),
                 },
+                manifests=table._extend_manifests(head, version, delta),
+                applied_batches=applied,
+                applied_hwm=hwm,
             )
             table._write_commit(commit)
             picked.append(batch_id)

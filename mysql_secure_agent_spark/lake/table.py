@@ -39,6 +39,7 @@ the reference agent (one ``Updater`` loop, ``Updater.java:48-60``).
 
 from __future__ import annotations
 
+import copy
 import hashlib
 import json
 import os
@@ -234,29 +235,29 @@ def _epoch_int(batch_id: str) -> int | None:
         return None
 
 
+# The hash behind bucket assignment is part of the table FORMAT: changing it
+# silently re-buckets new deltas away from a key's existing files, breaking
+# bucket-pruned reads. Every commit JSON records it; Murmur3 (``F.hash``) is
+# the only function this engine writes or reads (``Commit.from_json``
+# refuses any other).
+BUCKET_FUNCTION = "murmur3"
+
+
 @dataclass
 class Commit:
+    # Field order is the commit JSON's key order (``to_json``), except that
+    # ``bucket_function`` is written after ``n_buckets`` and ``files`` (the
+    # resolved view) is never written.
     version: int
     schema: list[tuple[str, str]]  # (name, spark ddl type) in order
     key_cols: list[str]
     bucket_cols: list[str]
     n_buckets: int
-    # bucket (as str) -> list of file entries {path, kind: base|delta}.
-    # RESOLVED view — populated from the manifest chain on load; the commit
-    # JSON itself persists only the manifest-file names (O(delta) writes).
-    files: dict[str, list[dict[str, Any]]]
-    applied_batches: dict[str, int] = field(default_factory=dict)  # batch_id -> version
-    parent: int | None = None
-    summary: dict[str, Any] = field(default_factory=dict)
-    # The hash behind bucket assignment is part of the table FORMAT: changing
-    # it silently re-buckets new deltas away from a key's existing files,
-    # breaking bucket-pruned reads. Persist it; manifests written before the
-    # field existed default to the function that code used then (xxhash64).
-    bucket_function: str = "murmur3"
     # Ordered manifest-file names under _commits/; the resolved file set is
     # the union of their "add" dicts. Compaction/rewrite resets the chain to
     # one full manifest.
     manifests: list[str] = field(default_factory=list)
+    applied_batches: dict[str, int] = field(default_factory=dict)  # batch_id -> version
     # Exactly-once high-water mark: every streaming epoch <= hwm is applied
     # even if its id was pruned from applied_batches. Safe because Structured
     # Streaming only retries the LATEST unfinished batch — epoch e+1 never
@@ -268,8 +269,7 @@ class Commit:
     # delta — the analog of MySQL purging binlogs out from under a replica
     # (the reference surfaces server error 1236 for that,
     # ``BinlogClient.java`` reconnect path). read_changes() refuses cursors
-    # below this. -1 = nothing compacted yet (or a pre-field table, where
-    # compacted history is simply not tracked).
+    # below this. -1 = nothing compacted yet.
     changefeed_floor: int = -1
     # Names dropped by DROP COLUMN whose physical data may still live in
     # old files (drop is metadata-only). Projection is by NAME (no Iceberg
@@ -287,12 +287,6 @@ class Commit:
     # Full-rewrite operations (purge/modify/rebucket) materialize the
     # logical names and clear this map.
     renamed_cols: dict[str, list[str]] = field(default_factory=dict)
-    # Wall-clock commit time (epoch seconds), stamped once in _write_commit.
-    # Powers AS-OF-TIMESTAMP time travel (version_asof/read_asof). Single
-    # writer ⇒ non-decreasing in practice; version order stays the
-    # authoritative order and asof resolution tolerates clock jitter by
-    # scanning, never assuming strict monotonicity.
-    committed_at: float | None = None
     # VALUE columns whose per-file min/max are recorded in manifests — on
     # micro-batch deltas too, where key stats are useless (arrival order
     # spans the key domain) but a time-like column's range is narrow. These
@@ -300,6 +294,12 @@ class Commit:
     # prune read(key_range=...) reconciliation directly (a value column is
     # mutable across a key's images — see read()'s docstring).
     stats_cols: list[str] = field(default_factory=list)
+    # Wall-clock commit time (epoch seconds), stamped once in _write_commit.
+    # Powers AS-OF-TIMESTAMP time travel (version_asof/read_asof). Single
+    # writer ⇒ non-decreasing in practice; version order stays the
+    # authoritative order and asof resolution tolerates clock jitter by
+    # scanning, never assuming strict monotonicity.
+    committed_at: float | None = None
     # Highest DDL-event lsn applied to this table. DDL idempotence cannot be
     # judged from schema state alone: ADD(c) then DROP(c) leaves the schema
     # exactly as if ADD were never applied, so a state-only "pending" check
@@ -308,6 +308,12 @@ class Commit:
     # a crashed micro-batch sees the mark persisted by the DDL's own commit
     # and skips it — the same replay-idempotence design as applied_batches.
     ddl_hwm: int = -1
+    parent: int | None = None
+    summary: dict[str, Any] = field(default_factory=dict)
+    # bucket (as str) -> list of file entries {path, kind: base|delta}.
+    # RESOLVED view — populated from the manifest chain on load; the commit
+    # JSON itself persists only the manifest-file names (O(delta) writes).
+    files: dict[str, list[dict[str, Any]]] = field(default_factory=dict)
 
     def is_applied(self, batch_id: str) -> bool:
         if batch_id in self.applied_batches:
@@ -315,58 +321,61 @@ class Commit:
         e = _epoch_int(batch_id)
         return e is not None and e <= self.applied_hwm
 
-    def to_json(self) -> str:
-        return json.dumps(
-            {
-                "version": self.version,
-                "schema": self.schema,
-                "key_cols": self.key_cols,
-                "bucket_cols": self.bucket_cols,
-                "n_buckets": self.n_buckets,
-                "bucket_function": self.bucket_function,
-                "manifests": self.manifests,
-                "applied_batches": self.applied_batches,
-                "applied_hwm": self.applied_hwm,
-                "changefeed_floor": self.changefeed_floor,
-                "dropped_cols": self.dropped_cols,
-                "renamed_cols": self.renamed_cols,
-                "stats_cols": self.stats_cols,
-                "committed_at": self.committed_at,
-                "ddl_hwm": self.ddl_hwm,
-                "parent": self.parent,
-                "summary": self.summary,
+    def successor(
+        self, version: int, summary: dict[str, Any], **changes: Any
+    ) -> "Commit":
+        """The commit of a state transition from this one — the ONLY way a
+        new commit is derived, so a new field is carried by every
+        transition. Every field is copied (containers too, so the two
+        commits never alias), ``parent`` becomes this version, the resolved
+        ``files`` view is dropped and ``committed_at`` cleared so
+        ``_write_commit`` stamps the new commit's own instant (a copied
+        stamp would make ``version_asof`` resolve past it). ``changes``
+        names what the transition alters."""
+        carried = {
+            f.name: copy.copy(v)
+            for f in dataclasses.fields(self)
+            if isinstance(v := getattr(self, f.name), (list, dict))
+        }
+        return dataclasses.replace(
+            self,
+            **{
+                **carried,
+                "version": version,
+                "parent": self.version,
+                "files": {},
+                "committed_at": None,
+                "summary": summary,
+                **changes,
             },
-            indent=1,
         )
+
+    def to_json(self) -> str:
+        d: dict[str, Any] = {}
+        for f in dataclasses.fields(self):
+            if f.name == "files":
+                continue
+            d[f.name] = getattr(self, f.name)
+            if f.name == "n_buckets":
+                d["bucket_function"] = BUCKET_FUNCTION
+        return json.dumps(d, indent=1)
 
     @staticmethod
     def from_json(s: str) -> "Commit":
         d = json.loads(s)
+        bf = d.get("bucket_function", BUCKET_FUNCTION)
+        if bf != BUCKET_FUNCTION:
+            raise ValueError(
+                f"unsupported bucket_function {bf!r}: tables are bucketed "
+                f"with {BUCKET_FUNCTION!r} only"
+            )
+        d["schema"] = [tuple(x) for x in d["schema"]]
         return Commit(
-            version=d["version"],
-            schema=[tuple(x) for x in d["schema"]],
-            key_cols=d["key_cols"],
-            bucket_cols=d["bucket_cols"],
-            n_buckets=d["n_buckets"],
-            # Legacy default for commits written before the field existed:
-            # the LAST pre-field code generation bucketed with murmur3
-            # (F.hash) — the xxhash64 era predates it and no on-disk tables
-            # from that era survive (the format was < 1 commit old). Tables
-            # written since the field exists always carry it explicitly.
-            bucket_function=d.get("bucket_function", "murmur3"),
-            # legacy manifests (pre-manifest-list) inlined the file listing
-            files=d.get("files", {}),
-            manifests=d.get("manifests", []),
-            applied_batches=d["applied_batches"],
-            applied_hwm=d.get("applied_hwm", -1),
-            changefeed_floor=d.get("changefeed_floor", -1),
-            dropped_cols=d.get("dropped_cols", []),
-            renamed_cols=d.get("renamed_cols", {}),
-            stats_cols=d.get("stats_cols", []),
-            committed_at=d.get("committed_at"),
-            ddl_hwm=d.get("ddl_hwm", -1),
-            parent=d.get("parent"),
-            summary=d.get("summary", {}),
+            **{
+                f.name: d[f.name]
+                for f in dataclasses.fields(Commit)
+                if f.name != "files" and f.name in d
+            }
         )
 
 
@@ -460,7 +469,6 @@ class LakeTable:
             key_cols=list(key_cols),
             bucket_cols=list(bucket_cols or key_cols),
             n_buckets=n_buckets,
-            files={},
             stats_cols=list(stats_cols or []),
             summary={"operation": "create"},
         )
@@ -500,13 +508,15 @@ class LakeTable:
             )
         with open(os.path.join(self._commits_dir, self._commit_fname(v))) as f:
             commit = Commit.from_json(f.read())
-        if resolve and commit.manifests:  # resolve the manifest chain (adds only)
-            files: dict[str, list[dict[str, Any]]] = {}
-            for name in commit.manifests:
-                for b, entries in self._load_manifest(name).items():
-                    files.setdefault(b, []).extend(entries)
-            commit.files = files
+        if resolve:
+            self._resolve(commit)
         return commit
+
+    def _resolve(self, commit: Commit) -> None:
+        """Materialize ``commit.files`` from its manifest chain (adds only)."""
+        for name in commit.manifests:
+            for b, entries in self._load_manifest(name).items():
+                commit.files.setdefault(b, []).extend(entries)
 
     # ------------------------------------------------------------- manifests
     def _manifest_path(self, name: str) -> str:
@@ -541,12 +551,7 @@ class LakeTable:
         stays O(MAX_MANIFESTS) no matter how many merges have run. Rolled-up
         files are NEW files; old commits keep resolving through the old ones
         (time travel unaffected)."""
-        if not parent.manifests and parent.files:
-            # legacy parent (inline file listing): snapshot it into a full
-            # manifest once, then append deltas
-            chain = [self._write_manifest(self._mname(version, ".legacy"), parent.files)]
-        else:
-            chain = list(parent.manifests)
+        chain = list(parent.manifests)
         if delta:  # empty micro-batches (heartbeats) add no manifest
             chain.append(self._write_manifest(self._mname(version), delta))
         if len(chain) > MAX_MANIFESTS:
@@ -608,6 +613,27 @@ class LakeTable:
             f.write(commit.to_json())
         os.replace(tmp, path)
         self._swing_pointer(commit.version)
+
+    def _history_ceiling(self, commit: Commit, entries: list[dict[str, Any]]) -> int:
+        """Changefeed floor after a rewrite that collapses ``entries``: the
+        highest lsn they hold, never below ``commit``'s floor. Files written
+        by purge/modify carry no recorded lsn range (``_walk_written``
+        without ``footer_lsn_stats``); those fall back to one footer scan of
+        exactly those files, paid at rewrite time, never on read."""
+        floor = max(
+            (e["lsn_max"] for e in entries if e.get("lsn_max") is not None),
+            default=-1,
+        )
+        unknown = [
+            os.path.join(self.root, e["path"])
+            for e in entries
+            if e.get("lsn_max") is None
+        ]
+        if unknown:
+            _, _, _, mx = _footer_stats(unknown)
+            if mx is not None:
+                floor = max(floor, int(mx))
+        return max(floor, commit.changefeed_floor)
 
     def _walk_written(
         self,
@@ -679,21 +705,13 @@ class LakeTable:
 
     # ------------------------------------------------------------- bucketing
     def _bucket_expr(self, commit: Commit) -> F.Column:
-        """bucket = pmod(hash(bucket_cols), n_buckets), dispatched on the
-        table's persisted bucket_function. 'murmur3' (F.hash) is deliberately
-        the SAME function Spark's HashPartitioning uses, so after
+        """bucket = pmod(hash(bucket_cols), n_buckets) with the table
+        format's Murmur3 (``BUCKET_FUNCTION``) — deliberately the SAME
+        function Spark's HashPartitioning uses, so after
         ``repartition(n_buckets, *bucket_cols)`` partition id == bucket id
         exactly and a ``partitionBy("_bucket")`` write emits one file per
-        bucket per task with NO extra exchange (see merge()). 'xxhash64'
-        tables (pre-format-change) stay readable and correctly bucketed —
-        they just lose the one-file-per-bucket write alignment."""
-        if commit.bucket_function == "xxhash64":
-            h = F.xxhash64(*commit.bucket_cols)
-        elif commit.bucket_function == "murmur3":
-            h = F.hash(*commit.bucket_cols)
-        else:
-            raise ValueError(f"unknown bucket_function {commit.bucket_function!r}")
-        return F.pmod(h, F.lit(commit.n_buckets)).cast("int")
+        bucket per task with NO extra exchange (see merge())."""
+        return F.pmod(F.hash(*commit.bucket_cols), F.lit(commit.n_buckets)).cast("int")
 
     # ------------------------------------------------------------------ read
     def candidate_paths(
@@ -759,7 +777,7 @@ class LakeTable:
         stats (written by sorted compaction) cannot intersect the range;
         ``key_probe`` skips delta files whose manifest bloom proves the
         looked-up key absent. Entries without recorded stats
-        (legacy/modify-rewrite) are kept — parquet row-group stats still
+        (purge/modify rewrites) are kept — parquet row-group stats still
         prune them executor-side."""
         paths = self.candidate_paths(
             commit, buckets, min_lsn_exclusive, key_range, key_probe
@@ -863,19 +881,11 @@ class LakeTable:
             if list(cols) == commit.stats_cols:
                 return commit.version  # idempotent
             version = commit.version + 1
-            new_commit = dataclasses.replace(
-                commit,
-                version=version,
-                files={},
+            new_commit = commit.successor(
+                version,
+                {"operation": "set_stats_cols", "columns": list(cols)},
                 manifests=self._extend_manifests(commit, version, {}),
-                applied_batches=dict(commit.applied_batches),
                 stats_cols=list(cols),
-                parent=commit.version,
-                # replace() copies the PARENT's stamp — reset so
-                # _write_commit stamps this commit's own instant (a reused
-                # stamp would make version_asof resolve past this commit)
-                committed_at=None,
-                summary={"operation": "set_stats_cols", "columns": list(cols)},
             )
             self._write_commit(new_commit)
             return new_commit.version
@@ -1045,10 +1055,6 @@ class LakeTable:
         missing = [c for c in commit.bucket_cols if c not in key]
         if missing:
             raise KeyError(f"lookup key must include bucket cols; missing {missing}")
-        if commit.bucket_function != "murmur3":
-            raise NotImplementedError(
-                f"driver-side bucketing for {commit.bucket_function!r} tables"
-            )
         from .bloom import key_hash
 
         types = dict(commit.schema)
@@ -1183,18 +1189,6 @@ class LakeTable:
                     "the window is impossible; full-resync the "
                     "consumer instead"
                 )
-                def _commit_paths(c: "Commit") -> set[str]:
-                    # legacy pre-manifest-list commits inline their file
-                    # listing (manifests == []); their paths are already in
-                    # memory — the manifest-name fast path must not treat
-                    # two empty name-sets as "nothing changed"
-                    if c.manifests:
-                        return _paths_of(set(c.manifests))
-                    return {
-                        e["path"] for es in c.files.values() for e in es
-                    }
-
-                prev_c = base_commit
                 prev_manifests = set(base_commit.manifests)
                 for w in range(since_version + 1, commit.version + 1):
                     try:
@@ -1202,14 +1196,9 @@ class LakeTable:
                     except (ValueError, OSError) as exc:
                         raise _rewrite_err from exc
                     cur_manifests = set(cw.manifests)
-                    fast_skip = (
-                        prev_manifests
-                        and cur_manifests
-                        and not (prev_manifests - cur_manifests)
-                    )
-                    if not fast_skip:
-                        pprev = _commit_paths(prev_c)
-                        pcur = _commit_paths(cw)
+                    if prev_manifests - cur_manifests:
+                        pprev = _paths_of(prev_manifests)
+                        pcur = _paths_of(cur_manifests)
                         dropped = pprev - pcur
                         if dropped:
                             if (
@@ -1218,7 +1207,6 @@ class LakeTable:
                             ):
                                 raise _rewrite_err
                             harmless_adds |= pcur - pprev
-                    prev_c = cw
                     prev_manifests = cur_manifests
             new_files = {
                 b: [
@@ -1524,25 +1512,9 @@ class LakeTable:
                     if delta
                     else None
                 )
-                staged = Commit(
-                    version=-1,  # unassigned until publish
-                    schema=head.schema,
-                    key_cols=head.key_cols,
-                    bucket_cols=head.bucket_cols,
-                    n_buckets=head.n_buckets,
-                    bucket_function=head.bucket_function,
-                    files={},
-                    manifests=list(head.manifests)
-                    + ([delta_manifest] if delta_manifest else []),
-                    applied_batches=dict(head.applied_batches),
-                    applied_hwm=head.applied_hwm,
-                    changefeed_floor=head.changefeed_floor,
-                    dropped_cols=list(head.dropped_cols),
-            stats_cols=list(head.stats_cols),
-                    renamed_cols=dict(head.renamed_cols),
-                    ddl_hwm=head.ddl_hwm,
-                    parent=head.version,
-                    summary={
+                staged = head.successor(
+                    -1,  # unassigned until publish
+                    {
                         "operation": "wap_stage",
                         "wap_id": wap_id,
                         "batch_id": batch_id,
@@ -1551,6 +1523,8 @@ class LakeTable:
                         "deletes": metrics["deletes"],
                         "upserts": metrics["upserts"],
                     },
+                    manifests=head.manifests
+                    + ([delta_manifest] if delta_manifest else []),
                 )
                 tmp = staged_path + ".tmp"
                 with open(tmp, "w") as f:
@@ -1579,26 +1553,12 @@ class LakeTable:
             applied = dict(head.applied_batches)
             applied[batch_id] = version
             applied, hwm = self._prune_applied(applied, head.applied_hwm)
-            new_commit = Commit(
-                version=version,
-                schema=head.schema,
-                key_cols=head.key_cols,
-                bucket_cols=head.bucket_cols,
-                n_buckets=head.n_buckets,
-                bucket_function=head.bucket_function,
-                # files deliberately unresolved (not persisted by to_json
-                # anyway); readers resolve via the manifest chain
-                files={},
+            new_commit = head.successor(
+                version,
+                {"operation": "merge", **{k: metrics[k] for k in ("batch_id", "rows_in", "deletes", "upserts")}},
                 manifests=self._extend_manifests(head, version, delta),
                 applied_batches=applied,
                 applied_hwm=hwm,
-                changefeed_floor=head.changefeed_floor,
-                dropped_cols=list(head.dropped_cols),
-            stats_cols=list(head.stats_cols),
-                renamed_cols=dict(head.renamed_cols),
-                ddl_hwm=head.ddl_hwm,
-                parent=head.version,
-                summary={"operation": "merge", **{k: metrics[k] for k in ("batch_id", "rows_in", "deletes", "upserts")}},
             )
             self._write_commit(new_commit)
         metrics["wall_ms"] = int((time.time() - t0) * 1000)
@@ -1718,12 +1678,8 @@ class LakeTable:
             raise FileNotFoundError(f"no staged commit with wap_id {wap_id!r}")
         with open(path) as f:
             commit = Commit.from_json(f.read())
-        if resolve and commit.manifests:
-            files: dict[str, list[dict[str, Any]]] = {}
-            for name in commit.manifests:
-                for b, entries in self._load_manifest(name).items():
-                    files.setdefault(b, []).extend(entries)
-            commit.files = files
+        if resolve:
+            self._resolve(commit)
         return commit
 
     def read_staged(
@@ -1789,7 +1745,6 @@ class LakeTable:
             if (
                 head.n_buckets != staged.n_buckets
                 or head.bucket_cols != staged.bucket_cols
-                or head.bucket_function != staged.bucket_function
                 or head.schema != staged.schema
             ):
                 raise ValueError(
@@ -1805,24 +1760,9 @@ class LakeTable:
             applied = dict(head.applied_batches)
             applied[batch_id] = version
             applied, hwm = self._prune_applied(applied, head.applied_hwm)
-            new_commit = Commit(
-                version=version,
-                schema=head.schema,
-                key_cols=head.key_cols,
-                bucket_cols=head.bucket_cols,
-                n_buckets=head.n_buckets,
-                bucket_function=head.bucket_function,
-                files={},
-                manifests=self._extend_manifests(head, version, delta),
-                applied_batches=applied,
-                applied_hwm=hwm,
-                changefeed_floor=head.changefeed_floor,
-                dropped_cols=list(head.dropped_cols),
-            stats_cols=list(head.stats_cols),
-                renamed_cols=dict(head.renamed_cols),
-                ddl_hwm=head.ddl_hwm,
-                parent=head.version,
-                summary={
+            new_commit = head.successor(
+                version,
+                {
                     "operation": "wap_publish",
                     "wap_id": wap_id,
                     "batch_id": batch_id,
@@ -1830,6 +1770,9 @@ class LakeTable:
                     "deletes": s.get("deletes"),
                     "upserts": s.get("upserts"),
                 },
+                manifests=self._extend_manifests(head, version, delta),
+                applied_batches=applied,
+                applied_hwm=hwm,
             )
             self._write_commit(new_commit)
             # the delta now lives in the published chain (m{version}.json);
@@ -1881,9 +1824,8 @@ class LakeTable:
         }
 
     def delta_stats(self) -> dict[int, dict[str, int]]:
-        """Per-bucket delta pressure: file count + total bytes. Sizes come
-        from the manifest (recorded at commit); legacy entries fall back to
-        a stat call."""
+        """Per-bucket delta pressure: file count + total bytes (recorded in
+        the manifest at commit — no stat calls)."""
         c = self.commit_at()
         out: dict[int, dict[str, int]] = {}
         for b, entries in c.files.items():
@@ -1892,9 +1834,7 @@ class LakeTable:
                 if e["kind"] != "delta":
                     continue
                 n += 1
-                nbytes += e.get("bytes") or os.path.getsize(
-                    os.path.join(self.root, e["path"])
-                )
+                nbytes += e["bytes"]
             out[int(b)] = {"n_deltas": n, "bytes": nbytes}
         return out
 
@@ -1982,22 +1922,10 @@ class LakeTable:
 
         # Compaction collapses history: whatever lsn range it rewrites is no
         # longer faithfully replayable (intermediate images and tombstones
-        # are gone) — raise the changefeed floor to its ceiling. Entries
-        # missing recorded stats (legacy) fall back to one footer scan of
-        # exactly those files, paid here at compaction time, never on read.
-        rewritten = [e for b, es in commit.files.items() if int(b) in todo for e in es]
-        known = [e["lsn_max"] for e in rewritten if e.get("lsn_max") is not None]
-        unknown = [
-            os.path.join(self.root, e["path"])
-            for e in rewritten
-            if e.get("lsn_max") is None
-        ]
-        floor = max(known, default=-1)
-        if unknown:
-            _, _, _, mx = _footer_stats(unknown)
-            if mx is not None:
-                floor = max(floor, int(mx))
-        floor = max(floor, commit.changefeed_floor)
+        # are gone) — raise the changefeed floor to its ceiling.
+        floor = self._history_ceiling(
+            commit, [e for b, es in commit.files.items() if int(b) in todo for e in es]
+        )
 
         raw = self._read_files(spark, commit, todo)
         # Same fused single-exchange plan as merge(): cluster on bucket_cols
@@ -2075,24 +2003,11 @@ class LakeTable:
             files.setdefault(b, []).extend(es)
         # compaction rewrites the referenced file set → reset the manifest
         # chain to one full manifest (the Iceberg-style consolidation point)
-        new_commit = Commit(
-            version=version,
-            schema=commit.schema,
-            key_cols=commit.key_cols,
-            bucket_cols=commit.bucket_cols,
-            n_buckets=commit.n_buckets,
-            bucket_function=commit.bucket_function,
-            files=files,
-            manifests=[self._write_manifest(f"m{version:08d}.full.json", files)],
-            applied_batches=dict(commit.applied_batches),
-            applied_hwm=commit.applied_hwm,
+        new_commit = commit.successor(
+            version,
+            {"operation": "compact", "buckets": todo},
+            manifests=[self._write_manifest(self._mname(version, ".full"), files)],
             changefeed_floor=floor,
-            dropped_cols=list(commit.dropped_cols),
-            stats_cols=list(commit.stats_cols),
-            renamed_cols=dict(commit.renamed_cols),
-            ddl_hwm=commit.ddl_hwm,
-            parent=commit.version,
-            summary={"operation": "compact", "buckets": todo},
         )
         self._write_commit(new_commit)
         return {
@@ -2131,47 +2046,27 @@ class LakeTable:
             commit = self.commit_at()  # resolved: the floor needs lsn stats
             if batch_id is not None and commit.is_applied(batch_id):
                 return commit.version
-            entries = [e for es in commit.files.values() for e in es]
-            known = [e["lsn_max"] for e in entries if e.get("lsn_max") is not None]
-            unknown = [
-                os.path.join(self.root, e["path"])
-                for e in entries
-                if e.get("lsn_max") is None
-            ]
-            floor = max(known, default=-1)
-            if unknown:
-                _, _, _, mx = _footer_stats(unknown)
-                if mx is not None:
-                    floor = max(floor, int(mx))
-            floor = max(floor, commit.changefeed_floor)
+            floor = self._history_ceiling(
+                commit, [e for es in commit.files.values() for e in es]
+            )
             version = commit.version + 1
             applied = dict(commit.applied_batches)
             hwm = commit.applied_hwm
             if batch_id is not None:
                 applied[str(batch_id)] = version
                 applied, hwm = self._prune_applied(applied, hwm)
-            new_commit = Commit(
-                version=version,
-                schema=commit.schema,
-                key_cols=commit.key_cols,
-                bucket_cols=commit.bucket_cols,
-                n_buckets=commit.n_buckets,
-                bucket_function=commit.bucket_function,
-                files={},
+            new_commit = commit.successor(
+                version,
+                {"operation": "truncate"},
                 # fresh one-manifest chain referencing nothing: the live set
                 # is empty by construction, not by tombstones
-                manifests=[self._write_manifest(f"m{version:08d}.full.json", {})],
+                manifests=[self._write_manifest(self._mname(version, ".full"), {})],
                 applied_batches=applied,
                 applied_hwm=hwm,
                 changefeed_floor=floor,
-                dropped_cols=list(commit.dropped_cols),
-            stats_cols=list(commit.stats_cols),
-                renamed_cols=dict(commit.renamed_cols),
                 ddl_hwm=max(
                     commit.ddl_hwm, -1 if ddl_lsn is None else int(ddl_lsn)
                 ),
-                parent=commit.version,
-                summary={"operation": "truncate"},
             )
             self._write_commit(new_commit)
         return version
@@ -2206,24 +2101,9 @@ class LakeTable:
         commit = self.commit_at()
         if new_n_buckets == commit.n_buckets:
             return {"skipped": True, "n_buckets": commit.n_buckets}
-        if commit.bucket_function != "murmur3":
-            raise NotImplementedError(
-                f"rebucket for bucket_function={commit.bucket_function!r}"
-            )
-
-        all_entries = [e for es in commit.files.values() for e in es]
-        known = [e["lsn_max"] for e in all_entries if e.get("lsn_max") is not None]
-        unknown = [
-            os.path.join(self.root, e["path"])
-            for e in all_entries
-            if e.get("lsn_max") is None
-        ]
-        floor = max(known, default=-1)
-        if unknown:
-            _, _, _, mx = _footer_stats(unknown)
-            if mx is not None:
-                floor = max(floor, int(mx))
-        floor = max(floor, commit.changefeed_floor)
+        floor = self._history_ceiling(
+            commit, [e for es in commit.files.values() for e in es]
+        )
 
         raw = self._read_files(spark, commit)
         version = commit.version + 1
@@ -2254,28 +2134,17 @@ class LakeTable:
             ).items():
                 files.setdefault(b, []).extend(es)
 
-        new_commit = Commit(
-            version=version,
-            schema=commit.schema,
-            key_cols=commit.key_cols,
-            bucket_cols=commit.bucket_cols,
-            n_buckets=new_n_buckets,
-            bucket_function=commit.bucket_function,
-            files=files,
-            manifests=[self._write_manifest(f"m{version:08d}.full.json", files)],
-            applied_batches=dict(commit.applied_batches),
-            applied_hwm=commit.applied_hwm,
-            changefeed_floor=floor,
-            dropped_cols=list(commit.dropped_cols),
-            stats_cols=list(commit.stats_cols),
-            renamed_cols={},  # full rewrite materialized the logical names
-            ddl_hwm=commit.ddl_hwm,
-            parent=commit.version,
-            summary={
+        new_commit = commit.successor(
+            version,
+            {
                 "operation": "rebucket",
                 "from_n_buckets": commit.n_buckets,
                 "to_n_buckets": new_n_buckets,
             },
+            n_buckets=new_n_buckets,
+            manifests=[self._write_manifest(self._mname(version, ".full"), files)],
+            changefeed_floor=floor,
+            renamed_cols={},  # full rewrite materialized the logical names
         )
         self._write_commit(new_commit)
         return {
@@ -2313,26 +2182,12 @@ class LakeTable:
             self.purge_dropped_columns(spark)
             commit = self.commit_at(resolve=False)
         version = commit.version + 1
-        new_commit = Commit(
-            version=version,
+        new_commit = commit.successor(
+            version,
+            {"operation": "add_column", "column": name, "type": ddl_type},
             schema=commit.schema + [(name, ddl_type)],
-            key_cols=commit.key_cols,
-            bucket_cols=commit.bucket_cols,
-            n_buckets=commit.n_buckets,
-            bucket_function=commit.bucket_function,
-            files={},
-            # empty delta: keeps the chain, and snapshots legacy inline file
-            # listings into a manifest (to_json never persists `files`)
             manifests=self._extend_manifests(commit, version, {}),
-            applied_batches=dict(commit.applied_batches),
-            applied_hwm=commit.applied_hwm,
-            changefeed_floor=commit.changefeed_floor,
-            dropped_cols=list(commit.dropped_cols),
-            stats_cols=list(commit.stats_cols),
-            renamed_cols=dict(commit.renamed_cols),
             ddl_hwm=max(commit.ddl_hwm, -1 if ddl_lsn is None else int(ddl_lsn)),
-            parent=commit.version,
-            summary={"operation": "add_column", "column": name, "type": ddl_type},
         )
         self._write_commit(new_commit)
         return new_commit.version
@@ -2356,18 +2211,11 @@ class LakeTable:
         if name in set(commit.key_cols) | set(commit.bucket_cols):
             raise ValueError(f"cannot drop key/bucket column {name!r}")
         version = commit.version + 1
-        new_commit = Commit(
-            version=version,
+        new_commit = commit.successor(
+            version,
+            {"operation": "drop_column", "column": name},
             schema=[(n, dt) for n, dt in commit.schema if n != name],
-            key_cols=commit.key_cols,
-            bucket_cols=commit.bucket_cols,
-            n_buckets=commit.n_buckets,
-            bucket_function=commit.bucket_function,
-            files={},
             manifests=self._extend_manifests(commit, version, {}),
-            applied_batches=dict(commit.applied_batches),
-            applied_hwm=commit.applied_hwm,
-            changefeed_floor=commit.changefeed_floor,
             # the dropped column's prior physical names hold its stale
             # values in old files too — reserve them all against re-ADD
             dropped_cols=sorted(
@@ -2380,8 +2228,6 @@ class LakeTable:
             },
             stats_cols=[c for c in commit.stats_cols if c != name],
             ddl_hwm=max(commit.ddl_hwm, -1 if ddl_lsn is None else int(ddl_lsn)),
-            parent=commit.version,
-            summary={"operation": "drop_column", "column": name},
         )
         self._write_commit(new_commit)
         return new_commit.version
@@ -2444,18 +2290,13 @@ class LakeTable:
         priors = [old] + renamed.pop(old, [])
         renamed[new] = priors
         version = commit.version + 1
-        new_commit = Commit(
-            version=version,
+        new_commit = commit.successor(
+            version,
+            {"operation": "rename_column", "from": old, "to": new},
             schema=[(new if n == old else n, dt) for n, dt in commit.schema],
             key_cols=[new if c == old else c for c in commit.key_cols],
             bucket_cols=[new if c == old else c for c in commit.bucket_cols],
-            n_buckets=commit.n_buckets,
-            bucket_function=commit.bucket_function,
-            files={},
             manifests=self._extend_manifests(commit, version, {}),
-            applied_batches=dict(commit.applied_batches),
-            applied_hwm=commit.applied_hwm,
-            changefeed_floor=commit.changefeed_floor,
             # reserve the old physical name against re-ADD resurrection
             dropped_cols=sorted(set(commit.dropped_cols) | {old}),
             renamed_cols=renamed,
@@ -2464,8 +2305,6 @@ class LakeTable:
             # pruning (conservative — a rename is never a rewrite)
             stats_cols=[new if c == old else c for c in commit.stats_cols],
             ddl_hwm=max(commit.ddl_hwm, -1 if ddl_lsn is None else int(ddl_lsn)),
-            parent=commit.version,
-            summary={"operation": "rename_column", "from": old, "to": new},
         )
         self._write_commit(new_commit)
         return new_commit.version
@@ -2491,24 +2330,12 @@ class LakeTable:
             _require_ts_micros(spark)
             rewritten.write.partitionBy("_bucket").parquet(out_dir)
             files = self._walk_written(out_dir, rel_dir, "delta")
-        new_commit = Commit(
-            version=version,
-            schema=commit.schema,
-            key_cols=commit.key_cols,
-            bucket_cols=commit.bucket_cols,
-            n_buckets=commit.n_buckets,
-            bucket_function=commit.bucket_function,
-            files=files,
-            manifests=[self._write_manifest(f"m{version:08d}.full.json", files)],
-            applied_batches=dict(commit.applied_batches),
-            applied_hwm=commit.applied_hwm,
-            changefeed_floor=commit.changefeed_floor,
+        new_commit = commit.successor(
+            version,
+            {"operation": "purge_dropped", "columns": commit.dropped_cols},
+            manifests=[self._write_manifest(self._mname(version, ".full"), files)],
             dropped_cols=[],
             renamed_cols={},  # full rewrite materialized the logical names
-            stats_cols=list(commit.stats_cols),
-            ddl_hwm=commit.ddl_hwm,
-            parent=commit.version,
-            summary={"operation": "purge_dropped", "columns": commit.dropped_cols},
         )
         self._write_commit(new_commit)
         return new_commit.version
@@ -2544,24 +2371,13 @@ class LakeTable:
             _require_ts_micros(spark)
             casted.write.partitionBy("_bucket").parquet(out_dir)
             files = self._walk_written(out_dir, rel_dir, "delta")
-        new_commit = Commit(
-            version=version,
+        new_commit = commit.successor(
+            version,
+            {"operation": "modify_column", "column": name, "type": ddl_type},
             schema=new_schema,
-            key_cols=commit.key_cols,
-            bucket_cols=commit.bucket_cols,
-            n_buckets=commit.n_buckets,
-            bucket_function=commit.bucket_function,
-            files=files,
-            manifests=[self._write_manifest(f"m{version:08d}.full.json", files)],
-            applied_batches=dict(commit.applied_batches),
-            applied_hwm=commit.applied_hwm,
-            changefeed_floor=commit.changefeed_floor,
-            dropped_cols=list(commit.dropped_cols),
-            stats_cols=list(commit.stats_cols),
+            manifests=[self._write_manifest(self._mname(version, ".full"), files)],
             renamed_cols={},  # full rewrite materialized the logical names
             ddl_hwm=max(commit.ddl_hwm, -1 if ddl_lsn is None else int(ddl_lsn)),
-            parent=commit.version,
-            summary={"operation": "modify_column", "column": name, "type": ddl_type},
         )
         self._write_commit(new_commit)
         return version
@@ -2663,24 +2479,10 @@ class LakeTable:
         current = self.commit_at(resolve=False)
         if version == current.version:
             return version
-        new_commit = Commit(
-            version=current.version + 1,
-            schema=list(target.schema),
-            key_cols=target.key_cols,
-            bucket_cols=target.bucket_cols,
-            n_buckets=target.n_buckets,
-            bucket_function=target.bucket_function,
-            files={},
-            manifests=list(target.manifests),
-            applied_batches=dict(target.applied_batches),
-            applied_hwm=target.applied_hwm,
-            changefeed_floor=target.changefeed_floor,
-            dropped_cols=list(target.dropped_cols),
-            stats_cols=list(target.stats_cols),
-            renamed_cols=dict(target.renamed_cols),
-            ddl_hwm=target.ddl_hwm,
+        new_commit = target.successor(
+            current.version + 1,
+            {"operation": "rollback", "to_version": version},
             parent=current.version,
-            summary={"operation": "rollback", "to_version": version},
         )
         self._write_commit(new_commit)
         return new_commit.version

@@ -186,7 +186,10 @@ class _BitReader:
         return m
 
 
-def _huff_decode(br: _BitReader, dec: dict) -> int:
+def _huff_decode(
+    br: _BitReader, dec: dict[int, tuple[int, int, int]]
+) -> tuple[int, int, tuple[int, int, int]]:
+    """(length, code, dec entry) of the next Huffman code."""
     code = 0
     for ln in range(1, 17):
         code = (code << 1) | br.bits(1)

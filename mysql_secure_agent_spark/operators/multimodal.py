@@ -660,8 +660,10 @@ def extract_media_meta(
                     },
                     sort_keys=True,
                 )
-        except ValueError:
-            return None  # torn/foreign container: catalog rows survive
+        except (ValueError, struct.error, IndexError, ZeroDivisionError):
+            # torn/foreign container (a short read inside a header struct,
+            # a zero timescale): NULL cell, the catalog rows survive
+            return None
         return None
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

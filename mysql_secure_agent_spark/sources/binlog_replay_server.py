@@ -27,6 +27,7 @@ import socket
 import struct
 import threading
 import zlib
+from pathlib import Path
 
 from .binlog_file import iter_binlog_events
 from .binlog_packets import FORMAT_DESCRIPTION_EVENT, ROTATE_EVENT
@@ -84,7 +85,7 @@ class BinlogReplayServer:
     ):
         if isinstance(files, str):
             files = {
-                os.path.basename(p): open(p, "rb").read()
+                os.path.basename(p): Path(p).read_bytes()
                 for p in sorted(glob.glob(os.path.join(files, "mysql-bin.*")))
             }
         if not files:

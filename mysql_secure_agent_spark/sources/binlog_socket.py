@@ -552,6 +552,11 @@ class BinlogSocketClient:
                                    ].decode("latin1")
                     continue
                 if fh is None:
+                    if current is None:
+                        raise BinlogSocketError(
+                            f"event type {type_code:#x} arrived before the "
+                            "start ROTATE: no segment name (pass start_file)"
+                        )
                     path = os.path.join(out_dir, current)
                     fh = open(path, "wb")
                     fh.write(BINLOG_MAGIC)

@@ -23,6 +23,7 @@ import pytest
 from mysql_secure_agent_spark.sources.binlog_file import encode_binlog_file
 from mysql_secure_agent_spark.sources.binlog_packets import (
     EXT_WRITE_ROWS,
+    FORMAT_DESCRIPTION_EVENT,
     TABLE_MAP_EVENT,
     XID_EVENT,
     packets_to_changelog,
@@ -32,6 +33,7 @@ from mysql_secure_agent_spark.sources.binlog_replay_server import (
 )
 from mysql_secure_agent_spark.sources.binlog_socket import (
     BinlogSocketClient,
+    BinlogSocketError,
     ServerError,
 )
 
@@ -137,6 +139,15 @@ def test_spool_segments_byte_identical(two_files, tmp_path):
         with open(p, "rb") as f:
             assert f.read() == two_files[os.path.basename(p)]
     assert srv.error is None
+
+
+def test_spool_refuses_content_before_start_rotate(two_files, tmp_path):
+    """Without start_file, the server's start ROTATE names the first
+    segment; file content before it has no segment to land in."""
+    c = _client(BinlogReplayServer(two_files))
+    c.events = lambda *a, **k: iter([(FORMAT_DESCRIPTION_EVENT, bytes(19), b"")])
+    with pytest.raises(BinlogSocketError, match="start ROTATE"):
+        c.spool(str(tmp_path / "spool"))
 
 
 def test_server_from_directory(two_files, tmp_path):

@@ -220,16 +220,26 @@ def test_extract_media_meta_container_catalog(spark):
         b"\x01vorbis" + bytes(4) + bytes([2]) + (44100).to_bytes(4, "little")
         + bytes(13)
     )
+    ogg = build_ogg([vorbis_id, b"pkt"])
+    mp4 = build_mp4(
+        duration=2500,
+        tracks=[{"handler": "vide", "codec": "avc1", "timescale": 30000,
+                 "duration": 75000, "n_samples": 75}],
+    )
+    # mvhd's version byte (offset 36) claims version 1 over a version-0
+    # body: the movie timescale reads as 0
+    mp4_v1 = bytearray(mp4)
+    mp4_v1[36] = 1
     rows = [
-        (1, "audio", build_ogg([vorbis_id, b"pkt"]), None),
-        (2, "video", build_mp4(
-            duration=2500,
-            tracks=[{"handler": "vide", "codec": "avc1", "timescale": 30000,
-                     "duration": 75000, "n_samples": 75}],
-        ), None),
+        (1, "audio", ogg, None),
+        (2, "video", mp4, None),
         (3, "video", build_avi(n_frames=50, fps=25.0), None),
         (4, "video", b"RIFF\x00\x00\x00\x00AVI torn", None),  # torn
         (5, "image", b"P6\n1 1\n255\n\x00\x00\x00", None),  # not a container
+        (6, "audio", ogg[:6], None),  # torn page header (short struct read)
+        (7, "audio", ogg[:4], None),  # capture pattern only
+        (8, "video", mp4[: len(mp4) // 2], None),  # torn box tree
+        (9, "video", bytes(mp4_v1), None),
     ]
     df = spark.createDataFrame(
         rows,
@@ -245,5 +255,7 @@ def test_extract_media_meta_container_catalog(spark):
     assert avi["fps"] == 25.0 and avi["handlers"] == ["MJPG"]
     assert out[4]["container"] is None  # torn: NULL, batch survived
     assert out[5]["container"] is None  # image: not a container
+    for torn in (6, 7, 8, 9):  # NULL, the Arrow batch survived
+        assert out[torn]["mime"] is not None and out[torn]["container"] is None
     # the base columns are unchanged
     assert out[1]["mime"] == "audio/ogg" and out[1]["sha256"]

@@ -6,6 +6,7 @@ Constants are patched small so a short run exercises both the manifest
 rollup and the applied-batch high-water-mark pruning.
 """
 
+import dataclasses
 import json
 import os
 
@@ -103,3 +104,51 @@ def test_merge_path_does_not_resolve_table_listing(spark, tmp_path, monkeypatch)
 
     # readers still resolve the full listing (all 5 batches present)
     assert tbl.read(spark).count() == 5 * 20
+
+
+def _full_commit():
+    return table_mod.Commit(
+        version=7,
+        schema=[("k", "bigint"), ("v", "string")],
+        key_cols=["k"],
+        bucket_cols=["k"],
+        n_buckets=4,
+        manifests=["m00000006.full.json", "m00000007.json"],
+        applied_batches={"5": 6, "6": 7},
+        applied_hwm=4,
+        changefeed_floor=12,
+        dropped_cols=["old"],
+        renamed_cols={"v": ["v0"]},
+        stats_cols=["v"],
+        committed_at=1700000000.25,
+        ddl_hwm=9,
+        parent=6,
+        summary={"operation": "merge", "batch_id": "6"},
+    )
+
+
+def test_commit_json_roundtrip_and_key_order():
+    c = _full_commit()
+    # every persisted field differs from its default, so a new field that
+    # to_json/from_json dropped would show up here
+    for f in dataclasses.fields(c):
+        if f.name != "files":
+            assert getattr(c, f.name) != (
+                f.default_factory() if f.default_factory is not dataclasses.MISSING
+                else f.default
+            ), f.name
+    assert table_mod.Commit.from_json(c.to_json()) == c
+    assert list(json.loads(c.to_json())) == [
+        "version", "schema", "key_cols", "bucket_cols", "n_buckets",
+        "bucket_function", "manifests", "applied_batches", "applied_hwm",
+        "changefeed_floor", "dropped_cols", "renamed_cols", "stats_cols",
+        "committed_at", "ddl_hwm", "parent", "summary",
+    ]
+    assert json.loads(c.to_json())["bucket_function"] == "murmur3"
+
+
+def test_commit_with_foreign_bucket_function_refused():
+    d = json.loads(_full_commit().to_json())
+    d["bucket_function"] = "xxhash64"
+    with pytest.raises(ValueError, match="bucket_function"):
+        table_mod.Commit.from_json(json.dumps(d))

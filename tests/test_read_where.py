@@ -272,13 +272,64 @@ def test_read_asof_respects_expiry_floor(spark, table):
         table.version_asof(t1 - 0.0005)
 
 
-def test_metadata_commit_gets_fresh_timestamp(spark, table):
-    """set_stats_cols (a dataclasses.replace commit) must stamp its OWN
-    committed_at — a stamp copied from the parent would make version_asof
-    at the parent's instant resolve past the metadata commit."""
+def _branch_then(spark, table, main_advances: bool):
+    br = table.create_branch("b")
+    br.merge(spark, _mk(spark, [("U", 1, "br", _ts(2), 2)]), "br1")
+    if main_advances:
+        table.merge(spark, _mk(spark, [("I", 2, "m", _ts(3), 3)]), "m1")
+
+
+# every state transition: (setup on top of one merged row, the transition)
+_TRANSITIONS = {
+    "merge": (None, lambda s, t: t.merge(s, _mk(s, [("U", 1, "b", _ts(2), 2)]), "b1")),
+    "set_stats_cols": (None, lambda s, t: t.set_stats_cols(["ts", "v"])),
+    "wap_publish": (
+        lambda s, t: t.merge(s, _mk(s, [("U", 1, "b", _ts(2), 2)]), "b1", wap_id="w"),
+        lambda s, t: t.publish_staged("w"),
+    ),
+    "compact": (None, lambda s, t: t.compact(s)),
+    "truncate": (None, lambda s, t: t.truncate()),
+    "rebucket": (None, lambda s, t: t.rebucket(s, 8)),
+    "add_column": (None, lambda s, t: t.add_column("x", "string")),
+    "drop_column": (None, lambda s, t: t.drop_column("v")),
+    "rename_column": (None, lambda s, t: t.rename_column("v", "v2")),
+    "purge_dropped": (
+        lambda s, t: t.drop_column("v"),
+        lambda s, t: t.purge_dropped_columns(s),
+    ),
+    "modify_column": (
+        lambda s, t: t.add_column("n", "int"),
+        lambda s, t: t.modify_column_type(s, "n", "bigint"),
+    ),
+    "rollback": (
+        lambda s, t: t.merge(s, _mk(s, [("U", 1, "b", _ts(2), 2)]), "b1"),
+        lambda s, t: t.rollback(1),
+    ),
+    "fast_forward": (
+        lambda s, t: _branch_then(s, t, main_advances=False),
+        lambda s, t: t.fast_forward("b"),
+    ),
+    "merge_branch": (
+        lambda s, t: _branch_then(s, t, main_advances=True),
+        lambda s, t: t.merge_branch("b"),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_TRANSITIONS))
+def test_metadata_commit_gets_fresh_timestamp(spark, table, op):
+    """Every transition (Commit.successor) must stamp its OWN committed_at —
+    a stamp copied from the parent would make version_asof at the parent's
+    instant resolve past the new commit."""
     table.merge(spark, _mk(spark, [("I", 1, "a", _ts(1), 1)]), "b0")
-    t1 = table.commit_at(resolve=False).committed_at
-    v = table.set_stats_cols(["ts", "v"])
-    c2 = table.commit_at(resolve=False)
-    assert c2.version == v and c2.committed_at > t1
-    assert table.version_asof(t1) == v - 1
+    setup, act = _TRANSITIONS[op]
+    if setup is not None:
+        setup(spark, table)
+    parent = table.commit_at(resolve=False)
+    act(spark, table)
+    c = table.commit_at(resolve=False)
+    assert c.version == parent.version + 1 and c.parent == parent.version
+    # a cherry-picked batch lands as an ordinary merge commit
+    assert c.summary["operation"] == {"merge_branch": "merge"}.get(op, op)
+    assert c.committed_at > parent.committed_at
+    assert table.version_asof(parent.committed_at) == parent.version

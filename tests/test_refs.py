@@ -193,3 +193,16 @@ def test_branch_readable_after_main_expiry_below_fork(spark, tmp_path):
     # and can still take new commits
     br.merge(spark, _batch(spark, [("U", 77, "b", 1, 950)]), "bn")
     assert (77, "b", 1) in _state(spark, br)
+
+
+def test_branch_truncate_leaves_main_manifests_alone(spark, tmp_path):
+    """A branch TRUNCATE writes its full manifest in the branch namespace:
+    a branch commit at the same version number as a main compaction must
+    not overwrite main's manifest (main then read as empty)."""
+    tbl = _mk(spark, tmp_path, n=10)
+    br = tbl.create_branch("b")
+    tbl.compact(spark)
+    assert br.truncate() == tbl.current_version()  # same version number
+    assert _state(spark, br) == []
+    fresh = LakeTable(tbl.root)
+    assert len(_state(spark, fresh)) == 10
