@@ -431,7 +431,7 @@ def encode_typed_rows(schema: list[ColumnSpec], rows: list[dict]) -> pd.Series:
         body = bytearray()
         for j, spec in enumerate(schema):
             v = row.get(spec.name)
-            if v is None or (isinstance(v, float) and np.isnan(v)):
+            if v is None or (pd.api.types.is_scalar(v) and pd.isna(v)):
                 bitmap[j // 8] |= 1 << (j % 8)
             else:
                 body.extend(_enc_value(spec, v))

@@ -50,7 +50,7 @@ import dataclasses
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from ..operators.dedup_changelog import last_image_wins
 
@@ -616,24 +616,18 @@ class LakeTable:
 
     def _history_ceiling(self, commit: Commit, entries: list[dict[str, Any]]) -> int:
         """Changefeed floor after a rewrite that collapses ``entries``: the
-        highest lsn they hold, never below ``commit``'s floor. Files written
-        by purge/modify carry no recorded lsn range (``_walk_written``
-        without ``footer_lsn_stats``); those fall back to one footer scan of
-        exactly those files, paid at rewrite time, never on read."""
-        floor = max(
-            (e["lsn_max"] for e in entries if e.get("lsn_max") is not None),
-            default=-1,
-        )
-        unknown = [
-            os.path.join(self.root, e["path"])
-            for e in entries
-            if e.get("lsn_max") is None
-        ]
-        if unknown:
-            _, _, _, mx = _footer_stats(unknown)
-            if mx is not None:
-                floor = max(floor, int(mx))
-        return max(floor, commit.changefeed_floor)
+        highest lsn they hold, never below ``commit``'s floor. Every file
+        the engine writes records its lsn range — merge deltas from the
+        merge Observation, rewrites from their footers (``_rewrite``).
+        A table written before purge/modify recorded it can still list
+        files without one (a table root reopened across runs, as
+        ``tools/cluster_job.py`` does); those fall back to one footer scan
+        of exactly those files, paid at rewrite time, never on read."""
+        ceil = [e.get("lsn_max") for e in entries]
+        legacy = [e["path"] for e, mx in zip(entries, ceil) if mx is None]
+        if legacy:
+            ceil.append(_footer_stats([os.path.join(self.root, p) for p in legacy])[3])
+        return max([commit.changefeed_floor] + [int(x) for x in ceil if x is not None])
 
     def _walk_written(
         self,
@@ -649,8 +643,8 @@ class LakeTable:
         rewrite path (merge, compact, rebucket, purge, modify) records its
         files through, so a new stats field lands in all manifests at once
         instead of silently diverging between them. ``footer_lsn_stats``
-        reads each file's footer for its lsn range (base rewrites; deltas
-        get exact batch-level stamps from the merge Observation instead);
+        reads each file's footer for its lsn range (``_rewrite``; merge
+        deltas get exact batch-level stamps from the merge Observation);
         ``key_stats_cols`` additionally records per-file key min/max for
         listing-level range pruning of key-sorted files."""
         todo: list[tuple[str, str, str]] = []  # (bucket, rel path, abs path)
@@ -774,11 +768,12 @@ class LakeTable:
         cursor — listing-level pruning: an incremental reader of a 10^6-file
         table opens only the files its cursor can touch, no footer reads.
         ``key_range`` additionally skips files whose recorded per-file key
-        stats (written by sorted compaction) cannot intersect the range;
+        stats (written by every ``_rewrite``) cannot intersect the range;
         ``key_probe`` skips delta files whose manifest bloom proves the
-        looked-up key absent. Entries without recorded stats
-        (purge/modify rewrites) are kept — parquet row-group stats still
-        prune them executor-side."""
+        looked-up key absent. Every file records its lsn range; entries
+        without stats for a range column (merge deltas carry no key stats,
+        files written before ``set_stats_cols`` none for its columns) are
+        kept — parquet row-group stats still prune them executor-side."""
         paths = self.candidate_paths(
             commit, buckets, min_lsn_exclusive, key_range, key_probe
         )
@@ -806,18 +801,10 @@ class LakeTable:
         spark: SparkSession,
         version: int | None = None,
         buckets: list[int] | None = None,
-        strategy: str = "max_by",
         key_range: dict[str, tuple[Any, Any]] | None = None,
         key_probe: int | None = None,
     ) -> DataFrame:
         """Reconciled current state: last image per key, tombstones dropped.
-
-        ``strategy='max_by'`` (default) reduces via ``groupBy(key).agg(max_by)``
-        — partial map-side combine, so the shuffle moves one row per key per
-        map partition instead of every row image; this is what survives a
-        hot-key (Zipf conv_id) distribution at 10^10 events.
-        ``strategy='window'`` is the row_number-over-lsn formulation from the
-        north star; both are tested equivalent (lsn is globally unique).
 
         ``key_range`` = ``{key_col: (lo, hi)}`` (inclusive; None = unbounded
         side) restricts the scan to that range of KEY columns, pruned at the
@@ -833,7 +820,7 @@ class LakeTable:
         """
         commit = self.commit_at(version)
         return self._reconciled_state(
-            spark, commit, buckets, strategy, key_range, key_probe
+            spark, commit, buckets, key_range, key_probe
         )
 
     def version_asof(self, ts: Any) -> int:
@@ -895,7 +882,6 @@ class LakeTable:
         spark: SparkSession,
         ranges: dict[str, tuple[Any, Any]],
         version: int | None = None,
-        strategy: str = "max_by",
     ) -> DataFrame:
         """Reconciled current state restricted to rows whose FINAL image
         satisfies ``ranges`` (``{col: (lo, hi)}``, inclusive, None =
@@ -985,7 +971,7 @@ class LakeTable:
             return empty
         joined = base.join(cand, on=list(commit.key_cols), how="leftsemi")
         rec = last_image_wins(
-            joined, key_cols=commit.key_cols, order_col=SYS_LSN, strategy=strategy
+            joined, key_cols=commit.key_cols, order_col=SYS_LSN, strategy="max_by"
         )
         return _apply(rec.filter(~F.col(SYS_DELETED))).select(*cols)
 
@@ -994,7 +980,6 @@ class LakeTable:
         spark: SparkSession,
         commit: Commit,
         buckets: list[int] | None = None,
-        strategy: str = "max_by",
         key_range: dict[str, tuple[Any, Any]] | None = None,
         key_probe: int | None = None,
     ) -> DataFrame:
@@ -1032,8 +1017,10 @@ class LakeTable:
                     raw = raw.filter(F.col(c) >= F.lit(lo))
                 if hi is not None:
                     raw = raw.filter(F.col(c) <= F.lit(hi))
+        # max_by: partial map-side combine, so the shuffle moves one row per
+        # key per map partition instead of every image (hot-key feeds)
         reconciled = last_image_wins(
-            raw, key_cols=commit.key_cols, order_col=SYS_LSN, strategy=strategy
+            raw, key_cols=commit.key_cols, order_col=SYS_LSN, strategy="max_by"
         )
         return reconciled.filter(~F.col(SYS_DELETED)).select(*cols)
 
@@ -1079,7 +1066,6 @@ class LakeTable:
         spark: SparkSession,
         since_lsn: int,
         to_lsn: int | None = None,
-        strategy: str = "max_by",
         version: int | None = None,
         since_version: int | None = None,
     ) -> DataFrame:
@@ -1257,7 +1243,7 @@ class LakeTable:
         if win_hi is not None:
             win = win.filter(F.col(SYS_LSN) <= F.lit(win_hi))
         last = last_image_wins(
-            win, key_cols=commit.key_cols, order_col=SYS_LSN, strategy=strategy
+            win, key_cols=commit.key_cols, order_col=SYS_LSN, strategy="max_by"
         )
         return last.select(
             F.when(F.col(SYS_DELETED), F.lit("D")).otherwise(F.lit("U")).alias("op"),
@@ -1682,16 +1668,12 @@ class LakeTable:
             self._resolve(commit)
         return commit
 
-    def read_staged(
-        self, spark: SparkSession, wap_id: str, strategy: str = "max_by"
-    ) -> DataFrame:
+    def read_staged(self, spark: SparkSession, wap_id: str) -> DataFrame:
         """The table state the staged commit WOULD publish: parent state +
         staged delta, reconciled last-image-wins — what the audit inspects.
         Current readers are unaffected (CURRENT still points at the parent
         chain's head)."""
-        return self._reconciled_state(
-            spark, self.staged_commit(wap_id), strategy=strategy
-        )
+        return self._reconciled_state(spark, self.staged_commit(wap_id))
 
     def audit_staged(
         self, spark: SparkSession, wap_id: str, expectations: dict[str, str]
@@ -1919,43 +1901,19 @@ class LakeTable:
         )
         if not todo:
             return {"compacted_buckets": [], "skipped": True}
-
-        # Compaction collapses history: whatever lsn range it rewrites is no
-        # longer faithfully replayable (intermediate images and tombstones
-        # are gone) — raise the changefeed floor to its ceiling.
-        floor = self._history_ceiling(
-            commit, [e for b, es in commit.files.items() if int(b) in todo for e in es]
-        )
-
-        raw = self._read_files(spark, commit, todo)
-        # Same fused single-exchange plan as merge(): cluster on bucket_cols
-        # into n_buckets partitions, dedup rides it, write is bucket-aligned.
-        reconciled = (
-            last_image_wins(
-                raw.repartition(commit.n_buckets, *commit.bucket_cols),
-                key_cols=commit.key_cols,
-                order_col=SYS_LSN,
-                strategy="window",
-            )
-            .filter(~F.col(SYS_DELETED))
-        )
-        # Sort AFTER adding _bucket, with _bucket as the LEADING key: the
-        # parquet writer requires its output ordered by the partition
-        # column and will otherwise insert its own NON-STABLE sort on
-        # _bucket alone, silently scrambling the within-bucket order this
-        # sort just produced (each repartitioned task holds one bucket, so
-        # the leading key costs nothing — it only makes the writer see its
-        # required ordering as already satisfied).
         if sort_cols is not None and zorder_cols is not None:
             raise ValueError("sort_cols and zorder_cols are mutually exclusive")
-        reconciled = reconciled.withColumn("_bucket", self._bucket_expr(commit))
+        names = {n for n, _ in commit.schema}
+        for arg, cols in (("sort_cols", sort_cols), ("zorder_cols", zorder_cols)):
+            bad = sorted(set(cols or []) - names)
+            if bad:
+                raise ValueError(f"{arg} {bad} not in schema")
+
+        raw = self._read_files(spark, commit, todo)
+        order: list[str] | Column = []
         if zorder_cols is not None:
             from .zorder import _numeric, zvalue
 
-            names = {n for n, _ in commit.schema}
-            bad = sorted(set(zorder_cols) - names)
-            if bad:
-                raise ValueError(f"zorder_cols {bad} not in schema")
             types = dict(commit.schema)
             # rank bounds: one column-pruned min/max scan of the raw inputs
             # (superset images — conservative bounds are exactly as good)
@@ -1965,56 +1923,100 @@ class LakeTable:
                 aggs += [F.min(x).alias(f"_lo_{c}"), F.max(x).alias(f"_hi_{c}")]
             b = raw.agg(*aggs).first()
             bounds = {c: (b[f"_lo_{c}"], b[f"_hi_{c}"]) for c in zorder_cols}
-            reconciled = reconciled.withColumn(
-                "_z", zvalue(zorder_cols, types, bounds)
-            )
-            reconciled = reconciled.sortWithinPartitions("_bucket", "_z").drop(
-                "_z"
-            )
+            order = zvalue(zorder_cols, types, bounds)
         elif sort_cols is not None:
-            names = {n for n, _ in commit.schema}
-            bad = sorted(set(sort_cols) - names)
-            if bad:
-                raise ValueError(f"sort_cols {bad} not in schema")
-            reconciled = reconciled.sortWithinPartitions("_bucket", *sort_cols)
+            order = list(sort_cols)
         elif sort_within_buckets:
-            reconciled = reconciled.sortWithinPartitions(
-                "_bucket", *commit.key_cols
-            )
-        version = commit.version + 1
-        rel_dir = os.path.join("data", f"v{version:08d}")
-        out_dir = os.path.join(self.root, rel_dir)
-        _require_ts_micros(spark)
-        writer = reconciled.write.partitionBy("_bucket")
-        if target_file_rows is not None:
-            writer = writer.option("maxRecordsPerFile", int(target_file_rows))
-        writer.parquet(out_dir)
-
-        files = {
-            b: list(entries)
-            for b, entries in commit.files.items()
-            if int(b) not in todo
-        }
-        for b, es in self._walk_written(
-            out_dir, rel_dir, "base",
-            footer_lsn_stats=True,
-            key_stats_cols=list(commit.key_cols) + list(commit.stats_cols),
-        ).items():
-            files.setdefault(b, []).extend(es)
-        # compaction rewrites the referenced file set → reset the manifest
-        # chain to one full manifest (the Iceberg-style consolidation point)
-        new_commit = commit.successor(
-            version,
+            order = list(commit.key_cols)
+        self._rewrite(
+            spark, commit, raw,
             {"operation": "compact", "buckets": todo},
-            manifests=[self._write_manifest(self._mname(version, ".full"), files)],
-            changefeed_floor=floor,
+            reconcile=True,
+            keep={b: es for b, es in commit.files.items() if int(b) not in todo},
+            order=order,
+            max_rows=target_file_rows,
         )
-        self._write_commit(new_commit)
         return {
             "compacted_buckets": todo,
             "wall_ms": int((time.time() - t0) * 1000),
             "skipped": False,
         }
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        commit: Commit,
+        raw: DataFrame | None,
+        summary: dict[str, Any],
+        reconcile: bool,
+        keep: dict[str, list[dict[str, Any]]] | None = None,
+        order: list[str] | Column | None = None,
+        max_rows: int | None = None,
+        **changes: Any,
+    ) -> Commit:
+        """The one rewrite pipeline behind compact, rebucket, purge and
+        modify: write ``raw`` (stored-schema rows) as the successor of
+        ``commit`` (``changes`` as in ``Commit.successor``), listing
+        ``keep``'s entries plus the new files in ONE full manifest — the
+        consolidation point of the manifest chain.
+
+        Rows are clustered on ``bucket_cols`` into the successor's
+        ``n_buckets`` partitions, so partition id == ``_bucket`` and the
+        write needs no further exchange. ``reconcile`` keeps each key's last
+        image and drops tombstones (a full-bucket rewrite leaves nothing
+        older for them to mask), writes ``base`` files and raises the
+        changefeed floor to the replaced files' highest lsn; otherwise every
+        image stays and the files are ``delta``.
+
+        ``order`` (column names, or one computed key such as the Z-order
+        Morton code) sorts each bucket with ``_bucket`` as the LEADING key:
+        the parquet writer requires its input ordered by the partition
+        column and otherwise inserts its own NON-STABLE sort on ``_bucket``
+        alone, scrambling the within-bucket order (each task holds one
+        bucket, so the leading key costs nothing). ``max_rows`` caps rows
+        per file (``maxRecordsPerFile``), so sorted split files cover
+        contiguous intervals. Every file records its footer lsn range and
+        key/stats-column bounds."""
+        keep = keep or {}
+        if reconcile:
+            changes["changefeed_floor"] = self._history_ceiling(
+                commit,
+                [e for b, es in commit.files.items() if b not in keep for e in es],
+            )
+        new = commit.successor(commit.version + 1, summary, **changes)
+        files = {b: list(es) for b, es in keep.items()}
+        if raw is not None:
+            df = raw.repartition(new.n_buckets, *new.bucket_cols)
+            if reconcile:
+                df = last_image_wins(
+                    df,
+                    key_cols=new.key_cols,
+                    order_col=SYS_LSN,
+                    strategy="window",
+                ).filter(~F.col(SYS_DELETED))
+            df = df.withColumn("_bucket", self._bucket_expr(new))
+            if isinstance(order, Column):
+                df = df.withColumn("_z", order).sortWithinPartitions(
+                    "_bucket", "_z"
+                ).drop("_z")
+            elif order:
+                df = df.sortWithinPartitions("_bucket", *order)
+            rel_dir = os.path.join("data", f"v{new.version:08d}")
+            out_dir = os.path.join(self.root, rel_dir)
+            _require_ts_micros(spark)
+            writer = df.write.partitionBy("_bucket")
+            if max_rows is not None:
+                writer = writer.option("maxRecordsPerFile", int(max_rows))
+            writer.parquet(out_dir)
+            for b, es in self._walk_written(
+                out_dir, rel_dir, "base" if reconcile else "delta",
+                footer_lsn_stats=True,
+                key_stats_cols=list(new.key_cols) + list(new.stats_cols),
+            ).items():
+                files.setdefault(b, []).extend(es)
+        new.manifests = [self._write_manifest(self._mname(new.version, ".full"), files)]
+        self._write_commit(new)
+        return new
 
     def truncate(
         self,
@@ -2101,57 +2103,23 @@ class LakeTable:
         commit = self.commit_at()
         if new_n_buckets == commit.n_buckets:
             return {"skipped": True, "n_buckets": commit.n_buckets}
-        floor = self._history_ceiling(
-            commit, [e for es in commit.files.values() for e in es]
-        )
-
-        raw = self._read_files(spark, commit)
-        version = commit.version + 1
-        files: dict[str, list[dict[str, Any]]] = {}
-        rel_dir = os.path.join("data", f"v{version:08d}")
-        out_dir = os.path.join(self.root, rel_dir)
-        if raw is not None:
-            new_bucket = F.pmod(
-                F.hash(*commit.bucket_cols), F.lit(new_n_buckets)
-            ).cast("int")
-            reconciled = (
-                last_image_wins(
-                    raw.repartition(new_n_buckets, *commit.bucket_cols),
-                    key_cols=commit.key_cols,
-                    order_col=SYS_LSN,
-                    strategy="window",
-                )
-                .filter(~F.col(SYS_DELETED))
-                .sortWithinPartitions(*commit.key_cols)
-                .withColumn("_bucket", new_bucket)
-            )
-            _require_ts_micros(spark)
-            reconciled.write.partitionBy("_bucket").parquet(out_dir)
-            for b, es in self._walk_written(
-                out_dir, rel_dir, "base",
-                footer_lsn_stats=True,
-            key_stats_cols=list(commit.key_cols) + list(commit.stats_cols),
-            ).items():
-                files.setdefault(b, []).extend(es)
-
-        new_commit = commit.successor(
-            version,
+        new = self._rewrite(
+            spark, commit, self._read_files(spark, commit),
             {
                 "operation": "rebucket",
                 "from_n_buckets": commit.n_buckets,
                 "to_n_buckets": new_n_buckets,
             },
+            reconcile=True,
+            order=list(commit.key_cols),
             n_buckets=new_n_buckets,
-            manifests=[self._write_manifest(self._mname(version, ".full"), files)],
-            changefeed_floor=floor,
             renamed_cols={},  # full rewrite materialized the logical names
         )
-        self._write_commit(new_commit)
         return {
             "skipped": False,
             "from_n_buckets": commit.n_buckets,
             "to_n_buckets": new_n_buckets,
-            "version": version,
+            "version": new.version,
             "wall_ms": int((time.time() - t0) * 1000),
         }
 
@@ -2318,27 +2286,13 @@ class LakeTable:
         commit = self.commit_at()
         if not commit.dropped_cols and not commit.renamed_cols:
             return commit.version
-        raw = self._read_files(spark, commit)
-        version = commit.version + 1
-        files: dict[str, list[dict[str, Any]]] = {}
-        if raw is not None:
-            rewritten = raw.repartition(
-                commit.n_buckets, *commit.bucket_cols
-            ).withColumn("_bucket", self._bucket_expr(commit))
-            rel_dir = os.path.join("data", f"v{version:08d}")
-            out_dir = os.path.join(self.root, rel_dir)
-            _require_ts_micros(spark)
-            rewritten.write.partitionBy("_bucket").parquet(out_dir)
-            files = self._walk_written(out_dir, rel_dir, "delta")
-        new_commit = commit.successor(
-            version,
+        return self._rewrite(
+            spark, commit, self._read_files(spark, commit),
             {"operation": "purge_dropped", "columns": commit.dropped_cols},
-            manifests=[self._write_manifest(self._mname(version, ".full"), files)],
+            reconcile=False,
             dropped_cols=[],
             renamed_cols={},  # full rewrite materialized the logical names
-        )
-        self._write_commit(new_commit)
-        return new_commit.version
+        ).version
 
     def modify_column_type(
         self,
@@ -2357,30 +2311,15 @@ class LakeTable:
         if cur[name] == ddl_type:
             return commit.version
         raw = self._read_files(spark, commit)
-        new_schema = [(n, ddl_type if n == name else dt) for n, dt in commit.schema]
-        version = commit.version + 1
-        files: dict[str, list[dict[str, Any]]] = {}
-        if raw is not None:
-            casted = (
-                raw.repartition(commit.n_buckets, *commit.bucket_cols)
-                .withColumn(name, F.col(name).cast(ddl_type))
-                .withColumn("_bucket", self._bucket_expr(commit))
-            )
-            rel_dir = os.path.join("data", f"v{version:08d}")
-            out_dir = os.path.join(self.root, rel_dir)
-            _require_ts_micros(spark)
-            casted.write.partitionBy("_bucket").parquet(out_dir)
-            files = self._walk_written(out_dir, rel_dir, "delta")
-        new_commit = commit.successor(
-            version,
+        return self._rewrite(
+            spark, commit,
+            None if raw is None else raw.withColumn(name, F.col(name).cast(ddl_type)),
             {"operation": "modify_column", "column": name, "type": ddl_type},
-            schema=new_schema,
-            manifests=[self._write_manifest(self._mname(version, ".full"), files)],
+            reconcile=False,
+            schema=[(n, ddl_type if n == name else dt) for n, dt in commit.schema],
             renamed_cols={},  # full rewrite materialized the logical names
             ddl_hwm=max(commit.ddl_hwm, -1 if ddl_lsn is None else int(ddl_lsn)),
-        )
-        self._write_commit(new_commit)
-        return version
+        ).version
 
     # --------------------------------------------------------------- lineage
     def _append_metrics(self, metrics: dict[str, Any]) -> None:

@@ -36,6 +36,15 @@ __all__ = [
 ]
 
 
+def _unpack(fmt: str, data: bytes, off: int, end: int, what: str) -> tuple:
+    """``struct.unpack_from`` bounded by ``end`` (the enclosing page, box
+    or chunk): a torn or short header raises the parsers' one contracted
+    error, ``ValueError``, never ``struct.error``."""
+    if off + struct.calcsize(fmt) > end:
+        raise ValueError(f"torn {what} at {off}")
+    return struct.unpack_from(fmt, data, off)
+
+
 # ------------------------------------------------------------------- Ogg
 def _ogg_crc_table() -> list[int]:
     table = []
@@ -95,8 +104,8 @@ def parse_ogg(payload: bytes, *, verify_crc: bool = True) -> dict:
     ``{"n_pages", "serials": [..], "final_granule", "packets":
     [bytes, ...], "bos_pages", "eos_pages", "streams": {serial:
     codec-id dict}}`` — per-bitstream codec identification from each
-    serial's first packet. Raises on a bad capture pattern, version,
-    truncation, or CRC mismatch."""
+    serial's first packet. Raises ValueError on a bad capture pattern,
+    version, truncation, or CRC mismatch."""
     pos = 0
     n_pages = 0
     serials: list[int] = []
@@ -112,13 +121,14 @@ def parse_ogg(payload: bytes, *, verify_crc: bool = True) -> dict:
     while pos < len(payload):
         if payload[pos : pos + 4] != b"OggS":
             raise ValueError(f"bad Ogg capture pattern at {pos}")
-        if payload[pos + 4] != 0:
-            raise ValueError(f"unknown Ogg version {payload[pos + 4]}")
-        htype = payload[pos + 5]
-        granule, serial, _seq, crc, nsegs = struct.unpack_from(
-            "<qIIIB", payload, pos + 6
+        version, htype, granule, serial, _seq, crc, nsegs = _unpack(
+            "<BBqIIIB", payload, pos + 4, len(payload), "Ogg page header"
         )
+        if version != 0:
+            raise ValueError(f"unknown Ogg version {version}")
         lacing = payload[pos + 27 : pos + 27 + nsegs]
+        if len(lacing) != nsegs:
+            raise ValueError("torn Ogg segment table")
         body_len = sum(lacing)
         header_end = pos + 27 + nsegs
         body = payload[header_end : header_end + body_len]
@@ -233,7 +243,7 @@ def _walk_boxes(data: bytes, start: int, end: int):
         btype = data[pos + 4 : pos + 8]
         hdr = 8
         if size == 1:  # 64-bit largesize
-            size = struct.unpack_from(">Q", data, pos + 8)[0]
+            (size,) = _unpack(">Q", data, pos + 8, end, "MP4 largesize")
             hdr = 16
         elif size == 0:  # to end of enclosing box
             size = end - pos
@@ -251,10 +261,18 @@ _CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
 def parse_mp4(payload: bytes) -> dict:
     """Box walk → ``{"brand", "timescale", "duration_s", "tracks":
     [{"handler", "codec", "timescale", "duration_s", "n_samples"}]}``.
-    Refuses files without ftyp/moov."""
+    Raises ValueError on files without ftyp/moov, torn boxes, or a zero
+    movie timescale."""
     brand = None
     movie: dict = {}
     tracks: list[dict] = []
+
+    def _timing(b0: int, b1: int, what: str) -> tuple[int, int]:
+        # (timescale, duration) of a v0 (32-bit) or v1 (64-bit) header
+        (ver,) = _unpack(">B", payload, b0, b1, what)
+        if ver == 1:
+            return _unpack(">IQ", payload, b0 + 20, b1, what)
+        return _unpack(">II", payload, b0 + 12, b1, what)
 
     def walk(start: int, end: int, track: dict | None):
         nonlocal brand
@@ -262,30 +280,20 @@ def parse_mp4(payload: bytes) -> dict:
             if btype == b"ftyp":
                 brand = payload[b0 : b0 + 4].decode("latin1")
             elif btype == b"mvhd":
-                ver = payload[b0]
-                if ver == 1:
-                    ts, dur = struct.unpack_from(">IQ", payload, b0 + 20)
-                else:
-                    ts, dur = struct.unpack_from(">II", payload, b0 + 12)
-                movie["timescale"], movie["duration"] = ts, dur
+                movie["timescale"], movie["duration"] = _timing(b0, b1, "mvhd")
             elif btype == b"trak":
                 t: dict = {}
                 tracks.append(t)
                 walk(b0, b1, t)
             elif btype == b"mdhd" and track is not None:
-                ver = payload[b0]
-                if ver == 1:
-                    ts, dur = struct.unpack_from(">IQ", payload, b0 + 20)
-                else:
-                    ts, dur = struct.unpack_from(">II", payload, b0 + 12)
-                track["timescale"], track["duration"] = ts, dur
+                track["timescale"], track["duration"] = _timing(b0, b1, "mdhd")
             elif btype == b"hdlr" and track is not None:
                 track["handler"] = payload[b0 + 8 : b0 + 12].decode("latin1")
             elif btype == b"stsd" and track is not None:
                 # version/flags(4) entry_count(4) then sample entries
                 track["codec"] = payload[b0 + 12 : b0 + 16].decode("latin1")
             elif btype == b"stsz" and track is not None:
-                sample_size, count = struct.unpack_from(">II", payload, b0 + 4)
+                sample_size, count = _unpack(">II", payload, b0 + 4, b1, "stsz")
                 track["n_samples"] = count
                 track["uniform_sample_size"] = sample_size
             elif btype in _CONTAINERS:
@@ -294,6 +302,8 @@ def parse_mp4(payload: bytes) -> dict:
     walk(0, len(payload), None)
     if brand is None or "timescale" not in movie:
         raise ValueError("not an MP4: missing ftyp or moov/mvhd")
+    if not movie["timescale"]:
+        raise ValueError("MP4 mvhd timescale is zero")
     out_tracks = []
     for t in tracks:
         out_tracks.append(
@@ -411,7 +421,7 @@ def parse_avi(payload: bytes) -> dict:
                 walk(b0 + 4, b1)  # skip the list type fourcc
             elif fourcc == b"avih":
                 (usec_pf, _mbps, _pad, _flags, frames, _init, _nstreams,
-                 _bufsz, w, h) = struct.unpack_from("<10I", payload, b0)
+                 _bufsz, w, h) = _unpack("<10I", payload, b0, b1, "AVI avih")
                 out["width"], out["height"] = w, h
                 out["n_frames"] = frames
                 out["fps"] = (
@@ -420,8 +430,8 @@ def parse_avi(payload: bytes) -> dict:
             elif fourcc == b"strh":
                 ftype = payload[b0 : b0 + 4].decode("latin1")
                 handler = payload[b0 + 4 : b0 + 8].decode("latin1")
-                scale, rate, _start, length = struct.unpack_from(
-                    "<IIII", payload, b0 + 20
+                scale, rate, _start, length = _unpack(
+                    "<IIII", payload, b0 + 20, b1, "AVI strh"
                 )
                 out["streams"].append(
                     {

@@ -660,9 +660,9 @@ def extract_media_meta(
                     },
                     sort_keys=True,
                 )
-        except (ValueError, struct.error, IndexError, ZeroDivisionError):
-            # torn/foreign container (a short read inside a header struct,
-            # a zero timescale): NULL cell, the catalog rows survive
+        except ValueError:
+            # torn/foreign container (the parsers' one contracted error):
+            # NULL cell, the catalog rows survive
             return None
         return None
 

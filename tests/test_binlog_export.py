@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysql_secure_agent_spark.functions.mysql_codecs import (
+    DATETIME_V2,
     DOUBLE,
     LONG,
     LONGLONG,
@@ -120,6 +121,29 @@ def test_empty_changelog_writes_nothing(spark, tmp_path):
         _cl(spark).filter(F.lit(False)), out, "s", "t", SPECS
     )
     assert m == []
+
+
+def test_null_datetime_delete_roundtrips_as_null(spark, tmp_path):
+    """A NULL DATETIME reaches the encoder as ``pd.NaT`` (the pandas
+    null of a timestamp column), not None/NaN: it must set the row
+    image's null bit, and decode back as NULL."""
+    specs = [ColumnSpec("id", LONGLONG), ColumnSpec("ts", DATETIME_V2, {"fsp": 6})]
+    ddl = "op string, id long, ts timestamp, source_lsn long"
+    cl = spark.createDataFrame(
+        [("U", 1, dt.datetime(2024, 5, 1, 12, 30, 0, 250000), 1),
+         ("D", 1, None, 2)],
+        ddl,
+    )
+    out = str(tmp_path / "export")
+    write_binlog_changelog(cl, out, "s", "t", specs, n_files=1)
+    got = read_binlog_files(
+        spark, os.path.join(out, "mysql-bin.*"), "s", "t", ["id", "ts"], ddl,
+        verify_checksum=True,
+    ).orderBy("source_lsn").collect()
+    assert [(r["op"], r["id"], r["ts"]) for r in got] == [
+        ("I", 1, dt.datetime(2024, 5, 1, 12, 30, 0, 250000)),
+        ("D", 1, None),
+    ]
 
 
 def test_unsupported_type_raises():

@@ -3,13 +3,16 @@ delete visibility, lake-to-lake replication, listing-level file pruning via
 manifest lsn stats, and the compaction retention floor (the purged-binlog
 analog — MySQL error 1236 in the reference's reconnect path)."""
 
+import json
 import os
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 import pyspark.sql.types as T
 
-from mysql_secure_agent_spark.lake.table import LakeTable
+from mysql_secure_agent_spark.lake.table import SYS_LSN, LakeTable
 
 SCHEMA = T.StructType(
     [
@@ -91,6 +94,21 @@ def test_listing_level_file_pruning(spark, tbl3):
     assert len(expected) == 1 and len(surviving) == 3
     assert opened == expected
 
+    # purge-rewritten files record their lsn range too: a cursor at the
+    # purge's ceiling opens only what was merged after it
+    tbl3.drop_column("v")
+    tbl3.purge_dropped_columns(spark)
+    purged = [e for es in tbl3.commit_at().files.values() for e in es]
+    ceiling = max(e["lsn_max"] for e in purged)
+    assert ceiling == 24
+    tbl3.merge(spark, _cl(spark, [("U", 4, None, 31)]), "4")
+    after = tbl3._read_files(spark, tbl3.commit_at(), min_lsn_exclusive=ceiling)
+    opened = {
+        r["f"].split("/data/")[1].split("/")[0]
+        for r in after.select(F.input_file_name().alias("f")).distinct().collect()
+    }
+    assert opened and not opened & {e["path"].split(os.sep)[1] for e in purged}
+
 
 def test_compaction_floor_guards_cursors(spark, tbl3):
     res = tbl3.compact(spark)
@@ -109,11 +127,64 @@ def test_compaction_floor_guards_cursors(spark, tbl3):
     assert tbl3.commit_at().changefeed_floor == 24
 
 
-def test_compacted_base_entries_carry_lsn_stats(spark, tbl3):
-    tbl3.compact(spark)
+def test_floor_covers_files_without_recorded_lsn_range(spark, tbl3):
+    """A table written before purge rewrites recorded their lsn range lists
+    purge files with no ``lsn_min``/``lsn_max``. Compacting it must still
+    raise the floor to those files' highest lsn (footer scan), so a cursor
+    inside the collapsed history is refused instead of missing deletes."""
+    tbl3.drop_column("v")
+    tbl3.purge_dropped_columns(spark)
+    head = tbl3.commit_at(resolve=False)
+    (name,) = head.manifests
+    mpath = os.path.join(tbl3.root, "_commits", name)
+    with open(mpath) as f:
+        doc = json.load(f)
+    for es in doc["add"].values():
+        for e in es:
+            for k in ("lsn_min", "lsn_max", "key_stats"):
+                e.pop(k, None)
+    with open(mpath, "w") as f:
+        json.dump(doc, f)
+    legacy = LakeTable(tbl3.root)  # fresh handle: no cached manifest
+    assert legacy.commit_at().changefeed_floor < 24
+    legacy.compact(spark)
+    assert legacy.commit_at().changefeed_floor == 24
+    with pytest.raises(ValueError, match="compacted history"):
+        legacy.read_changes(spark, since_lsn=14)
+
+
+def _purge(spark, t):
+    t.drop_column("v")
+    t.purge_dropped_columns(spark)
+
+
+# rewrite -> (run it on a table, kind of the files it writes)
+REWRITES = {
+    "compact": (lambda spark, t: t.compact(spark), "base"),
+    "rebucket": (lambda spark, t: t.rebucket(spark, 3), "base"),
+    "purge_dropped_columns": (_purge, "delta"),
+    "modify_column_type": (
+        lambda spark, t: t.modify_column_type(spark, "v", "binary"), "delta"
+    ),
+}
+
+
+@pytest.mark.parametrize("rewrite", list(REWRITES))
+def test_compacted_base_entries_carry_lsn_stats(spark, tbl3, rewrite):
+    """Every rewrite records each written file's lsn range in its manifest
+    entry, equal to the file's own lsn min/max — what lets changefeed
+    floors and cursor pruning work from the manifest alone."""
+    run, kind = REWRITES[rewrite]
+    run(spark, tbl3)
     entries = [e for es in tbl3.commit_at().files.values() for e in es]
-    assert entries and all(e["kind"] == "base" for e in entries)
-    assert all(e.get("lsn_max") is not None for e in entries)
+    assert entries and all(e["kind"] == kind for e in entries)
+    for e in entries:
+        lsn = pq.read_table(
+            os.path.join(tbl3.root, e["path"]), columns=[SYS_LSN]
+        ).column(0)
+        assert (e.get("lsn_min"), e.get("lsn_max")) == (
+            pc.min(lsn).as_py(), pc.max(lsn).as_py()
+        )
 
 
 def test_read_changes_version_pin(spark, tbl3):

@@ -51,6 +51,12 @@ def test_ogg_guards():
     data[4] = 9
     with pytest.raises(ValueError, match="version"):
         parse_ogg(bytes(data))
+    # torn page headers: short of the 27-byte fixed header, and a segment
+    # table cut off after it
+    good = build_ogg([b"p" * 9])
+    for torn in (good[:5], good[:20], good[:27]):
+        with pytest.raises(ValueError, match="torn"):
+            parse_ogg(torn)
 
 
 def test_mp4_two_track_metadata():
@@ -91,6 +97,12 @@ def test_mp4_largesize_box_and_guards():
     bad[0:4] = struct.pack(">I", 1 << 30)
     with pytest.raises(ValueError, match="corrupt"):
         parse_mp4(bytes(bad))
+    # largesize box whose 8-byte size field is cut off
+    with pytest.raises(ValueError, match="torn"):
+        parse_mp4(build_mp4(tracks=[]) + struct.pack(">I", 1) + b"free" + bytes(4))
+    # zero movie timescale: no duration can be derived
+    with pytest.raises(ValueError, match="timescale"):
+        parse_mp4(build_mp4(timescale=0, tracks=[]))
 
 
 def test_sniffer_routes_containers():
@@ -173,6 +185,7 @@ def test_ogg_codec_identification():
 
 def test_avi_roundtrip_and_guards():
     from mysql_secure_agent_spark.operators.containers import (
+        _riff,
         build_avi,
         parse_avi,
     )
@@ -199,6 +212,13 @@ def test_avi_roundtrip_and_guards():
     bad[16:20] = (1 << 30).to_bytes(4, "little")
     with pytest.raises(ValueError, match="corrupt"):
         parse_avi(bytes(bad))
+    # avih / strh chunks too short for their header structs
+    for chunk in (
+        _riff(b"avih", bytes(8)),
+        _riff(b"LIST", b"strl" + _riff(b"strh", b"vidsMJPG")),
+    ):
+        with pytest.raises(ValueError, match="torn"):
+            parse_avi(_riff(b"RIFF", b"AVI " + chunk))
 
 
 def test_extract_media_meta_container_catalog(spark):
