@@ -147,7 +147,9 @@ class SecondaryIndex(IncrementalIndexMaintainer):
     # ---------------------------------------------------------------- lookup
     def lookup_keys(self, spark: SparkSession, value: Any) -> DataFrame:
         """src-key rows whose ``col`` equals ``value`` — touches 1/n_buckets
-        of the index's metadata and files."""
+        of the index's metadata and files. ``LakeTable.lookup`` reads in the
+        driver, so every matched entry is materialized there before the
+        caller's ``.limit(max_keys + 1)`` applies."""
         return self.table.lookup(spark, {self.col: value}).drop(self.col)
 
     def lookup_keys_range(

@@ -47,6 +47,8 @@ import shutil
 import time
 import uuid
 import dataclasses
+import functools
+import operator
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -586,13 +588,17 @@ class LakeTable:
         return kept, hwm
 
     def schema(self, version: int | None = None) -> T.StructType:
-        c = self.commit_at(version)
+        return self._declared_schema(self.commit_at(version))
+
+    @staticmethod
+    def _declared_schema(commit: Commit) -> T.StructType:
+        """The commit's logical columns, all nullable — what reads return."""
         return T.StructType(
-            [T.StructField(n, _type_from_ddl(dt), True) for n, dt in c.schema]
+            [T.StructField(n, _type_from_ddl(dt), True) for n, dt in commit.schema]
         )
 
     def _stored_schema(self, commit: Commit) -> T.StructType:
-        fields = [T.StructField(n, _type_from_ddl(dt), True) for n, dt in commit.schema]
+        fields = list(self._declared_schema(commit).fields)
         # prior physical names of renamed columns, typed as their logical
         # column: files written before the rename surface their values here
         # (and read the logical name as NULL); _read_files coalesces.
@@ -760,7 +766,6 @@ class LakeTable:
         buckets: list[int] | None = None,
         min_lsn_exclusive: int | None = None,
         key_range: dict[str, tuple[Any, Any]] | None = None,
-        key_probe: int | None = None,
     ) -> DataFrame | None:
         """Raw base+delta rows (with system columns) for the given buckets.
 
@@ -768,15 +773,12 @@ class LakeTable:
         cursor — listing-level pruning: an incremental reader of a 10^6-file
         table opens only the files its cursor can touch, no footer reads.
         ``key_range`` additionally skips files whose recorded per-file key
-        stats (written by every ``_rewrite``) cannot intersect the range;
-        ``key_probe`` skips delta files whose manifest bloom proves the
-        looked-up key absent. Every file records its lsn range; entries
+        stats (written by every ``_rewrite``) cannot intersect the range.
+        Every file records its lsn range; entries
         without stats for a range column (merge deltas carry no key stats,
         files written before ``set_stats_cols`` none for its columns) are
         kept — parquet row-group stats still prune them executor-side."""
-        paths = self.candidate_paths(
-            commit, buckets, min_lsn_exclusive, key_range, key_probe
-        )
+        paths = self.candidate_paths(commit, buckets, min_lsn_exclusive, key_range)
         if not paths:
             return None
         # Explicit schema → files written before an ADD COLUMN project the new
@@ -802,7 +804,6 @@ class LakeTable:
         version: int | None = None,
         buckets: list[int] | None = None,
         key_range: dict[str, tuple[Any, Any]] | None = None,
-        key_probe: int | None = None,
     ) -> DataFrame:
         """Reconciled current state: last image per key, tombstones dropped.
 
@@ -819,9 +820,7 @@ class LakeTable:
         resurrect.
         """
         commit = self.commit_at(version)
-        return self._reconciled_state(
-            spark, commit, buckets, key_range, key_probe
-        )
+        return self._reconciled_state(spark, commit, buckets, key_range)
 
     def version_asof(self, ts: Any) -> int:
         """Newest version committed at or before ``ts`` (epoch seconds or a
@@ -918,12 +917,7 @@ class LakeTable:
         if bad:
             raise ValueError(f"range columns {bad} not in schema {sorted(names)}")
         cols = [n for n, _ in commit.schema]
-        empty = spark.createDataFrame(
-            [],
-            T.StructType(
-                [T.StructField(n, _type_from_ddl(dt), True) for n, dt in commit.schema]
-            ),
-        )
+        empty = spark.createDataFrame([], self._declared_schema(commit))
 
         def _apply(df: DataFrame) -> DataFrame:
             for c, (lo, hi) in ranges.items():
@@ -981,7 +975,6 @@ class LakeTable:
         commit: Commit,
         buckets: list[int] | None = None,
         key_range: dict[str, tuple[Any, Any]] | None = None,
-        key_probe: int | None = None,
     ) -> DataFrame:
         """read()'s body over an already-loaded (resolved) commit — shared
         with read_staged(), which reconciles a commit that CURRENT never
@@ -994,20 +987,10 @@ class LakeTable:
                     f"{commit.key_cols}: listing-level range pruning is only "
                     "sound for columns immutable across a key's images"
                 )
-        raw = self._read_files(
-            spark, commit, buckets, key_range=key_range, key_probe=key_probe
-        )
+        raw = self._read_files(spark, commit, buckets, key_range=key_range)
         cols = [n for n, _ in commit.schema]
         if raw is None:
-            return spark.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField(n, _type_from_ddl(dt), True)
-                        for n, dt in commit.schema
-                    ]
-                ),
-            )
+            return spark.createDataFrame([], self._declared_schema(commit))
         if key_range:
             # the same predicate, executor-side: prunes row groups inside
             # surviving files and drops out-of-range keys BEFORE the
@@ -1025,25 +1008,44 @@ class LakeTable:
         return reconciled.filter(~F.col(SYS_DELETED)).select(*cols)
 
     def lookup(self, spark: SparkSession, key: dict[str, Any]) -> DataFrame:
-        """Point lookup by (a prefix of) the bucket key — O(bucket), not
-        O(table): the bucket id is computed DRIVER-SIDE with the same
-        Murmur3 math as ``_bucket_expr`` (``lake.bucketing``), so only that
-        bucket's files enter the listing; the key equality predicate then
-        pushes into the parquet scan, and post-compaction base files are
-        key-sorted (``compact(sort_within_buckets=True)``), so row-group
-        stats skip everything but the key's neighborhood. On a 10^10-row
-        table a conversation lookup touches 1/n_buckets of the metadata and
-        a handful of row groups — no full-table reconcile.
+        """Point lookup by (a prefix of) the bucket key, run in the driver:
+        the smallest query the engine serves starts no Spark job.
+
+        One resolved commit serves the whole lookup — its bucket layout, its
+        listing and its files — so a concurrent commit (a ``rebucket``
+        included) cannot make it read one snapshot's bucket id in another's
+        layout. The bucket id and the bloom probe come from one driver-side
+        Murmur3 chain (``lake.bucketing``/``lake.bloom``);
+        ``candidate_paths`` keeps that bucket's files whose key stats and
+        bloom admit the key. pyarrow reads them through the stored schema
+        (ADD COLUMN files fill NULL, MODIFY'd types widen) with the key
+        equality pushed into the scan, where row-group stats skip the rest
+        of sorted base files. RENAME priors coalesce newest-name-first, the
+        max-``source_lsn`` image per key wins, tombstones drop, and the
+        result becomes a DataFrame over a local relation: ``collect()``,
+        ``first()`` and ``take()`` on it run no job (an aggregate such as
+        ``count()``, or an Arrow ``toPandas()``, runs one small local job).
+
+        The read is eager: files are read when ``lookup()`` is called, not
+        when the DataFrame is collected.
 
         ``key`` must cover all of ``bucket_cols`` (else the bucket is
-        undetermined); extra key columns just add filters.
+        undetermined); other key columns just narrow the match.
         """
-        commit = self.commit_at(resolve=False)
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from .bloom import key_hash
+
+        commit = self.commit_at()
         missing = [c for c in commit.bucket_cols if c not in key]
         if missing:
             raise KeyError(f"lookup key must include bucket cols; missing {missing}")
-        from .bloom import key_hash
-
+        bad = sorted(set(key) - set(commit.key_cols))
+        if bad:
+            raise ValueError(f"lookup columns {bad} are not key columns {commit.key_cols}")
         types = dict(commit.schema)
         # one Murmur3 chain serves both pruning layers: bucket id is
         # h mod n_buckets (bucket_for's math) and h itself is the bloom
@@ -1052,14 +1054,36 @@ class LakeTable:
             [key[c] for c in commit.bucket_cols],
             [types[c] for c in commit.bucket_cols],
         )
-        b = h % commit.n_buckets
-        # point range per key column → files whose recorded key stats
-        # exclude the key never enter the listing (on top of bucket pruning)
-        key_range = {c: (v, v) for c, v in key.items() if c in dict(commit.schema)}
-        out = self.read(spark, buckets=[b], key_range=key_range, key_probe=h)
-        for c, v in key.items():
-            out = out.filter(F.col(c) == F.lit(v))
-        return out
+        paths = self.candidate_paths(
+            commit,
+            [h % commit.n_buckets],
+            key_range={c: (v, v) for c, v in key.items()},
+            key_probe=h,
+        )
+        stored = to_arrow_schema(self._stored_schema(commit))
+        # a renamed key column holds its value under exactly one of its
+        # names per row, so matching any of them matches the coalesce
+        match = functools.reduce(operator.and_, [
+            functools.reduce(operator.or_, [
+                ds.field(n) == pa.scalar(v, stored.field(c).type)
+                for n in [c, *commit.renamed_cols.get(c, [])]
+            ])
+            for c, v in key.items()
+        ])
+        t = ds.dataset(paths, schema=stored, format="parquet").to_table(filter=match)
+        for logical, priors in commit.renamed_cols.items():
+            i = t.schema.get_field_index(logical)
+            t = t.set_column(i, logical, pc.coalesce(t[logical], *[t[p] for p in priors]))
+        # last image per key: sorted by (key, lsn), an ordered group_by's
+        # "last" row index is each key's max-lsn image
+        keys = list(commit.key_cols)
+        t = t.take(pc.sort_indices(t, [(c, "ascending") for c in keys + [SYS_LSN]]))
+        t = t.append_column("_i", pa.array(range(t.num_rows), pa.int64()))
+        last = t.group_by(keys, use_threads=False).aggregate([("_i", "last")])
+        t = t.take(last["_i_last"])
+        t = t.filter(pc.equal(t[SYS_DELETED], False))
+        declared = self._declared_schema(commit)
+        return spark.createDataFrame(t.select(declared.names), declared)
 
     def read_changes(
         self,

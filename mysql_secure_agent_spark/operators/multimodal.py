@@ -42,6 +42,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from .containers import _unpack
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -125,13 +127,13 @@ def _decode_bmp(payload: bytes) -> np.ndarray:
     samples are BGR."""
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
-    data_off = struct.unpack_from("<I", payload, 10)[0]
-    hdr_size = struct.unpack_from("<I", payload, 14)[0]
+    end = len(payload)
+    data_off, hdr_size = _unpack("<II", payload, 10, end, "BMP file header")
     if hdr_size < 40:
         raise ValueError("BITMAPCOREHEADER not supported")
-    w, h_signed = struct.unpack_from("<ii", payload, 18)
-    planes, bpp = struct.unpack_from("<HH", payload, 26)
-    compression = struct.unpack_from("<I", payload, 30)[0]
+    w, h_signed, _planes, bpp, compression = _unpack(
+        "<iiHHI", payload, 18, end, "BMP info header"
+    )
     if bpp != 24 or compression != 0:
         raise NotImplementedError(
             f"only uncompressed 24-bit BMP supported (bpp={bpp}, "
@@ -156,11 +158,13 @@ def _decode_wav(payload: bytes) -> tuple[int, int, np.ndarray]:
     pos, rate, n_ch, bits, data = 12, None, None, None, None
     while pos + 8 <= len(payload):
         cid = payload[pos : pos + 4]
-        size = struct.unpack_from("<I", payload, pos + 4)[0]
+        (size,) = _unpack("<I", payload, pos + 4, len(payload), "WAV chunk header")
         body = pos + 8
         if cid == b"fmt ":
-            fmt_tag, n_ch, rate = struct.unpack_from("<HHI", payload, body)
-            bits = struct.unpack_from("<H", payload, body + 14)[0]
+            # PCMWAVEFORMAT: tag, channels, rate, byte rate, block align, bits
+            fmt_tag, n_ch, rate, _, _, bits = _unpack(
+                "<HHIIHH", payload, body, min(body + size, len(payload)), "WAV fmt chunk"
+            )
             if fmt_tag != 1 or bits != 16:
                 raise NotImplementedError(
                     f"only 16-bit PCM WAV supported (fmt={fmt_tag}, bits={bits})"

@@ -2,6 +2,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -20,3 +21,26 @@ def tmp_table_dir(tmp_path):
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture()
+def lookup_matches_read(spark):
+    """Assert ``table.lookup(spark, key)`` equals ``table.read(spark)``
+    filtered to ``key``: same rows, same schema, same dtypes."""
+    def check(table, key):
+        got = table.lookup(spark, key)
+        exp = table.read(spark)
+        for c, v in key.items():
+            exp = exp.filter(F.col(c) == F.lit(v))
+        assert got.schema == exp.schema
+        assert got.dtypes == exp.dtypes
+        keys = table.commit_at(resolve=False).key_cols
+
+        def ordered(rows):
+            return sorted(rows, key=lambda r: tuple(r[c] for c in keys))
+
+        rows = ordered(got.collect())
+        assert rows == ordered(exp.collect())
+        return rows
+
+    return check

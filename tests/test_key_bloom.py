@@ -8,6 +8,8 @@ the row cap, lookup correctness with blooms active (including deletes),
 and conservative behavior for entries without blooms.
 """
 
+import random
+
 import pyspark.sql.types as T
 import pytest
 
@@ -114,9 +116,40 @@ def test_entries_without_bloom_are_kept(spark, tmp_path):
     assert tbl.candidate_paths(commit, buckets=[h % commit.n_buckets], key_probe=h)
 
 
-def test_compound_bucket_cols_probe(spark, tmp_path):
+def test_compound_bucket_cols_probe(spark, tmp_path, lookup_matches_read):
     tbl = _mk(spark, tmp_path, bucket_cols=("conv_id", "turn_idx"))
     tbl.merge(spark, _batch(spark, ["a1", "a2", "a3"]), "b1")
     tbl.merge(spark, _batch(spark, ["b1", "b2", "b3"]), "b2")
+    tbl.merge(spark, spark.createDataFrame(
+        [("a2", 0, None, "D", 1000)],
+        "conv_id string, turn_idx int, text string, op string, source_lsn long",
+    ), "b3")
     got = tbl.lookup(spark, {"conv_id": "a2", "turn_idx": 1}).collect()
     assert [r.text for r in got] == ["a2-t1"]
+    assert lookup_matches_read(tbl, {"conv_id": "a2", "turn_idx": 0}) == []
+    for c, i in [("a2", 1), ("b3", 2), ("a2", 7), ("zz", 0)]:
+        lookup_matches_read(tbl, {"conv_id": c, "turn_idx": i})
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_prefix_lookup_equals_read_over_seeded_batches(
+    spark, tmp_path, seed, lookup_matches_read
+):
+    """Random upsert/delete batches over a small key space, so every bucket
+    holds bloom-carrying deltas with several images and tombstones per key;
+    a conv_id lookup (a prefix of the key) must equal the filtered read."""
+    rnd = random.Random(seed)
+    tbl = _mk(spark, tmp_path)
+    lsn = 0
+    for b in range(5):
+        rows = []
+        for _ in range(30):
+            lsn += 1
+            c, i = f"c{rnd.randrange(12)}", rnd.randrange(4)
+            op = "D" if rnd.random() < 0.25 else "U"
+            rows.append((c, i, f"{c}-t{i}-{lsn}", op, lsn))
+        tbl.merge(spark, spark.createDataFrame(
+            rows, "conv_id string, turn_idx int, text string, op string, source_lsn long"
+        ), f"b{b}")
+    for c in ["c0", "c3", "c6", "c9", "c12"]:  # c12 never written
+        lookup_matches_read(tbl, {"conv_id": c})

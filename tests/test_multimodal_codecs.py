@@ -69,6 +69,30 @@ def test_wav_skips_unknown_chunks():
     assert len(data) == 10 and data[0] == 5
 
 
+def _short_fmt_chunk() -> bytes:
+    """A WAV whose ``fmt `` chunk declares 8 bytes: the PCM fields it lacks
+    would otherwise be read out of the next chunk's header."""
+    raw = bytearray(encode_wav(4, 1))
+    raw[16:20] = (8).to_bytes(4, "little")
+    return bytes(raw[:20 + 8]) + bytes(raw[20 + 16:])
+
+
+@pytest.mark.parametrize(
+    "decode, payload",
+    [
+        (_decode_bmp, b"BM" + bytes(12)),  # file header cut short
+        (_decode_bmp, encode_bmp(3, 2, 1)[:30]),  # info header cut short
+        (_decode_wav, encode_wav(4, 1)[: 12 + 8 + 10]),  # fmt body cut short
+        (_decode_wav, _short_fmt_chunk()),  # fmt chunk smaller than PCM fields
+    ],
+    ids=["bmp-file-header", "bmp-info-header", "wav-fmt-cut", "wav-fmt-short-chunk"],
+)
+def test_torn_headers_raise_value_error(decode, payload):
+    # the contracted error for torn media is ValueError, never struct.error
+    with pytest.raises(ValueError, match="torn"):
+        decode(payload)
+
+
 def test_sniff_disambiguates_riff():
     assert _sniff_mime(encode_wav(4, 1)) == "audio/wav"
     assert _sniff_mime(b"RIFF\x00\x00\x00\x00AVI LIST") == "video/avi"
