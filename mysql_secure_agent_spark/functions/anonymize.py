@@ -15,6 +15,11 @@ in the hot path. NULL in → NULL out (concat propagates null).
 
 from __future__ import annotations
 
+import base64
+import hashlib
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 
 
@@ -33,3 +38,18 @@ def anonymize(df: DataFrame, columns: list[str], salt: str) -> DataFrame:
         if c in df.columns:
             out = out.withColumn(c, anonymize_col(c, salt))
     return out
+
+
+def anonymize_arrow(values: pa.ChunkedArray, salt: str) -> pa.Array:
+    """``anonymize_col`` for an Arrow column in the driver: the same
+    base64(SHA-1(salt ∥ value)) over the value's UTF-8 string, NULL in →
+    NULL out."""
+    prefix = salt.encode("utf-8")
+    return pa.array(
+        [
+            None if v is None
+            else base64.b64encode(hashlib.sha1(prefix + v.encode("utf-8")).digest()).decode()
+            for v in pc.cast(values, pa.string()).to_pylist()
+        ],
+        pa.string(),
+    )

@@ -72,8 +72,11 @@ def _require_ts_micros(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
 
+@functools.lru_cache(maxsize=None)
 def _type_from_ddl(ddl: str) -> T.DataType:
-    return T._parse_datatype_string(ddl)  # public-ish helper used by schema= strings
+    # public-ish helper used by schema= strings; a JVM round trip per call,
+    # so each DDL string is parsed once
+    return T._parse_datatype_string(ddl)
 
 
 def _footer_stats(paths: list[str]) -> tuple[int, int, int | None, int | None]:
@@ -197,6 +200,41 @@ def _file_key_bloom(
         return None
 
 
+def _last_images(t, keys: list[str]):
+    """The max-``source_lsn`` row per key of a pyarrow table, in key order:
+    sorted by (key, lsn), an ordered ``group_by``'s "last" row index is each
+    key's max-lsn image."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = t.take(pc.sort_indices(t, [(c, "ascending") for c in keys + [SYS_LSN]]))
+    t = t.append_column("_i", pa.array(np.arange(t.num_rows, dtype=np.int64)))
+    last = t.group_by(keys, use_threads=False).aggregate([("_i", "last")])
+    return t.take(last["_i_last"]).drop_columns(["_i"])
+
+
+def _write_lake_parquet(t, path: str) -> None:
+    """Write one lake data file from the driver in the encoding Spark's
+    writer gives the same rows: zstd level 3, no embedded Arrow schema,
+    and dictionary pages only for flat columns with fewer distinct values
+    than half the rows (parquet-mr falls back to PLAIN for the rest, such as
+    free text, timestamps and lsns)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    import pyarrow.types as pat
+
+    dictionary = [
+        f.name for f in t.schema
+        if not pat.is_nested(f.type)
+        and 2 * pc.count_distinct(t[f.name]).as_py() < t.num_rows
+    ]
+    pq.write_table(
+        t, path, compression="zstd", compression_level=3,
+        use_dictionary=dictionary, store_schema=False,
+    )
+
+
 def _entry_intersects(
     entry: dict[str, Any], key_range: dict[str, tuple[Any, Any]]
 ) -> bool:
@@ -216,6 +254,15 @@ def _entry_intersects(
         except TypeError:  # bound/stat type mismatch — keep (conservative)
             continue
     return True
+
+
+# A merge whose batch the optimizer estimates under this many bytes runs in
+# the driver (one Arrow collect, then pyarrow dedup/bucket/write); larger
+# batches run the Spark write job. On a 4-core host a live-tail batch of
+# ~1,200 events (~65 KB) merged in ~0.1 s there against ~0.6 s as a Spark
+# job; a binlog backfill trigger of 20k decoded events (~1.7 MB) stays on
+# the Spark path.
+DRIVER_MERGE_MAX_BYTES = 1 << 20
 
 
 # Bounds on driver-side metadata: the commit JSON must stay O(1)-ish no
@@ -643,6 +690,7 @@ class LakeTable:
         footer_lsn_stats: bool = False,
         key_stats_cols: list[str] | None = None,
         key_bloom_cols: list[tuple[str, str]] | None = None,
+        key_hashes: dict[int, list[int]] | None = None,
     ) -> dict[str, list[dict[str, Any]]]:
         """Manifest entries for the ``_bucket=``-partitioned parquet files a
         rewrite just wrote under ``out_dir`` — the ONE implementation every
@@ -652,7 +700,10 @@ class LakeTable:
         reads each file's footer for its lsn range (``_rewrite``; merge
         deltas get exact batch-level stamps from the merge Observation);
         ``key_stats_cols`` additionally records per-file key min/max for
-        listing-level range pruning of key-sorted files."""
+        listing-level range pruning of key-sorted files. ``key_hashes``
+        (bucket → the ``F.hash`` of every row's bucket key, from a driver
+        merge) builds each bucket's bloom from those hashes instead of
+        re-reading the key columns; the bloom bytes are the same."""
         todo: list[tuple[str, str, str]] = []  # (bucket, rel path, abs path)
         for d in sorted(os.listdir(out_dir)):
             if not d.startswith("_bucket="):
@@ -664,7 +715,8 @@ class LakeTable:
                 p = os.path.join(rel_dir, d, fn)
                 todo.append((b, p, os.path.join(self.root, p)))
 
-        def _entry_for(abs_p: str) -> dict[str, Any]:
+        def _entry_for(item: tuple[str, str, str]) -> dict[str, Any]:
+            b, _, abs_p = item
             entry: dict[str, Any] = {"bytes": os.path.getsize(abs_p)}
             if footer_lsn_stats:
                 _, _, mn, mx = _footer_stats([abs_p])
@@ -674,7 +726,13 @@ class LakeTable:
                 ks = _file_key_stats(abs_p, key_stats_cols)
                 if ks:
                     entry["key_stats"] = ks
-            if key_bloom_cols:
+            if key_hashes is not None:
+                from .bloom import KEY_BLOOM_MAX_ROWS, build_bloom
+
+                hs = key_hashes[int(b)]
+                if len(hs) <= KEY_BLOOM_MAX_ROWS:
+                    entry["key_bloom"] = build_bloom(hs)
+            elif key_bloom_cols:
                 kb = _file_key_bloom(
                     abs_p,
                     [c for c, _ in key_bloom_cols],
@@ -690,13 +748,14 @@ class LakeTable:
         # driver's critical path sequentially (~2 ms/file → ~0.25 s of
         # every bench merge at 128 buckets); a small thread pool cuts the
         # fixed cost without changing a single recorded byte.
-        if len(todo) > 1 and (footer_lsn_stats or key_stats_cols or key_bloom_cols):
+        reads = footer_lsn_stats or key_stats_cols or (key_bloom_cols and key_hashes is None)
+        if len(todo) > 1 and reads:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=min(8, len(todo))) as ex:
-                stats = list(ex.map(_entry_for, [t[2] for t in todo]))
+                stats = list(ex.map(_entry_for, todo))
         else:
-            stats = [_entry_for(t[2]) for t in todo]
+            stats = [_entry_for(t) for t in todo]
 
         files: dict[str, list[dict[str, Any]]] = {}
         for (b, p, _abs), st in zip(todo, stats):
@@ -1074,13 +1133,7 @@ class LakeTable:
         for logical, priors in commit.renamed_cols.items():
             i = t.schema.get_field_index(logical)
             t = t.set_column(i, logical, pc.coalesce(t[logical], *[t[p] for p in priors]))
-        # last image per key: sorted by (key, lsn), an ordered group_by's
-        # "last" row index is each key's max-lsn image
-        keys = list(commit.key_cols)
-        t = t.take(pc.sort_indices(t, [(c, "ascending") for c in keys + [SYS_LSN]]))
-        t = t.append_column("_i", pa.array(range(t.num_rows), pa.int64()))
-        last = t.group_by(keys, use_threads=False).aggregate([("_i", "last")])
-        t = t.take(last["_i_last"])
+        t = _last_images(t, list(commit.key_cols))
         t = t.filter(pc.equal(t[SYS_DELETED], False))
         declared = self._declared_schema(commit)
         return spark.createDataFrame(t.select(declared.names), declared)
@@ -1299,10 +1352,33 @@ class LakeTable:
         Returns merge metrics. Idempotent per ``batch_id``: a replayed batch
         is skipped (exactly-once effect).
 
+        Two execution paths, chosen by size, write the same table state:
+
+        * **Driver** — when the optimizer's planning-only size estimate of
+          ``batch_df`` is under ``DRIVER_MERGE_MAX_BYTES`` (1 MiB; a
+          module constant, not an option). One Spark job collects the
+          projected batch with Arrow, carrying ``F.hash(bucket_cols)``;
+          pyarrow keeps the max-``source_lsn`` image per key, runs the
+          transform's Arrow form, buckets and writes one zstd parquet file
+          per bucket. Blooms come from the collected hashes. On this path
+          the dedup is always exact max-lsn: ``dedup_strategy`` does not
+          apply.
+        * **Spark** — larger batches (and RDD-backed ones, whose size is
+          unknown): one write job that exchanges on the bucket key, dedups
+          per ``dedup_strategy`` and writes ``partitionBy("_bucket")``.
+
+        Everything after the files are written — manifest entries, WAP
+        staging, the batch ledger, the commit and the lineage row — is
+        shared by both paths.
+
         ``post_dedup_transform`` (optional DataFrame → DataFrame) runs on the
         *deduped* rows — the right place for normalization UDFs: it touches
         one row per key instead of every change image, and rides the dedup
-        shuffle's output partitions (no extra exchange).
+        shuffle's output partitions (no extra exchange). The driver path
+        needs its Arrow form: an object with ``arrow(table)`` and the
+        ``columns`` it rewrites (``CdcPipeline``'s transform); any other
+        transform, or one that rewrites a bucket column, takes the Spark
+        path.
 
         ``wap_id`` switches the merge into WRITE-AUDIT-PUBLISH mode (the
         Iceberg ``wap.id`` staged-commit workflow): all cluster work runs
@@ -1324,15 +1400,7 @@ class LakeTable:
         if commit.is_applied(batch_id):
             return {"skipped": True, "batch_id": batch_id}
 
-        from pyspark.sql import Observation
-
-        # Observations piggyback on the write job — merge stays a single pass
-        # (no separate count()/agg() jobs). Caveat: when Catalyst folds an
-        # empty sub-batch to a LocalRelation it prunes the CollectMetrics
-        # nodes and Observation.get raises — handled below by falling back to
-        # parquet-footer stats (trivially cheap exactly in that empty case).
-        obs_in = Observation()
-        obs_out = Observation()
+        batch_cols = set(batch_df.columns)
 
         def _src(c: str):
             # Rename-lag relabeling: a binlog row image carries no column
@@ -1340,72 +1408,25 @@ class LakeTable:
             # it holds, so a feed can keep shipping a column under its
             # pre-RENAME name. Accept the newest prior name as the same
             # physical slot (exactly what position-based decode means).
-            if c in batch_df.columns:
+            if c in batch_cols:
                 return F.col(c)
             for p in commit.renamed_cols.get(c, []):
-                if p in batch_df.columns:
+                if p in batch_cols:
                     return F.col(p)
             return F.lit(None)
 
-        in_aggs = [F.count(F.lit(1)).alias("rows_in")]
-        if lag_col is not None and lag_col in batch_df.columns:
-            # event-time bounds ride the same Observation (no extra job):
-            # replication lag — the CDC SLO — is commit wall time minus
-            # these, recorded per batch in the lineage metrics.
-            # cast("double") = tz-independent epoch seconds.
-            ts_epoch = F.col(lag_col).cast("timestamp").cast("double")
-            in_aggs += [
-                F.min(ts_epoch).alias("event_ts_min"),
-                F.max(ts_epoch).alias("event_ts_max"),
-            ]
-        projected = batch_df.observe(obs_in, *in_aggs).select(
+        columns = [
             *[_src(c).cast(dt).alias(c) for c, dt in commit.schema],
             F.col(SYS_LSN).cast("long").alias(SYS_LSN),
             (F.col(op_col) == F.lit("D")).alias(SYS_DELETED),
-        )
-        # Two exchange strategies, both ending bucket-aligned (partition id ==
-        # pmod(murmur3(bucket_cols), n_buckets) == _bucket, so the final
-        # partitionBy("_bucket") write needs no further repartition):
-        #
-        # * default ('window'/'max_by'): ONE exchange — an explicit
-        #   repartition(n_buckets, bucket_cols) that the dedup rides
-        #   (bucket_cols ⊆ key_cols satisfies its required distribution, so
-        #   Catalyst elides the dedup's own exchange). Every raw row image
-        #   crosses the wire once.
-        # * 'max_by_partial': the dedup aggregates FIRST on its own exchange —
-        #   Catalyst then plans a partial (map-side) aggregate, so duplicate
-        #   images of a key collapse inside each scan task and only partial
-        #   maxima cross the wire; a SECOND exchange bucket-aligns the
-        #   survivors (one row per key per batch). Two exchanges, but
-        #   exchange 1 shrinks by the within-task duplicate factor and
-        #   exchange 2 is O(distinct keys) — the winning trade whenever the
-        #   change feed revisits keys (hot-key/Zipf feeds, exactly where one
-        #   full-row exchange hurts most at 100 TB).
-        if dedup_strategy == "max_by_partial":
-            deduped = last_image_wins(
-                projected,
-                key_cols=commit.key_cols,
-                order_col=SYS_LSN,
-                strategy="max_by",
-            ).repartition(commit.n_buckets, *commit.bucket_cols)
-        else:
-            clustered = projected.repartition(commit.n_buckets, *commit.bucket_cols)
-            deduped = last_image_wins(
-                clustered,
-                key_cols=commit.key_cols,
-                order_col=SYS_LSN,
-                strategy=dedup_strategy,
-            )
-        deduped = deduped.observe(
-            obs_out,
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col(SYS_DELETED).cast("int")).alias("deletes"),
-            F.min(SYS_LSN).alias("lsn_min"),
-            F.max(SYS_LSN).alias("lsn_max"),
-        )
-        if post_dedup_transform is not None:
-            deduped = post_dedup_transform(deduped)
-        with_bucket = deduped.withColumn("_bucket", self._bucket_expr(commit))
+        ]
+        event_ts = None
+        if lag_col is not None and lag_col in batch_cols:
+            # event-time bounds of the input: replication lag — the CDC
+            # SLO — is commit wall time minus these, recorded per batch in
+            # the lineage metrics. cast("double") = tz-independent epoch
+            # seconds.
+            event_ts = F.col(lag_col).cast("timestamp").cast("double")
 
         # Data dir is keyed by batch AND attempt: the version is only
         # assigned under the commit lock AFTER the write, so concurrent
@@ -1421,11 +1442,16 @@ class LakeTable:
         attempt_tag = uuid.uuid4().hex[:8]
         rel_dir = os.path.join("data", f"b{batch_tag}_{attempt_tag}")
         out_dir = os.path.join(self.root, rel_dir)
-        # No repartition here: merge() already clustered the batch on
-        # bucket_cols (single fused exchange), so partition id == _bucket and
-        # partitionBy writes exactly one file per bucket per commit.
-        _require_ts_micros(spark)
-        with_bucket.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
+        if self._merges_in_driver(batch_df, commit, post_dedup_transform):
+            obs, key_hashes = self._write_delta_in_driver(
+                batch_df, columns, event_ts, commit, post_dedup_transform, out_dir
+            )
+        else:
+            obs = self._write_delta_with_spark(
+                spark, batch_df, columns, event_ts, commit, dedup_strategy,
+                post_dedup_transform, out_dir,
+            )
+            key_hashes = None
 
         types = dict(commit.schema)
         delta = self._walk_written(
@@ -1436,43 +1462,25 @@ class LakeTable:
             # candidate phase prunes these files at the listing level
             key_stats_cols=list(commit.stats_cols) or None,
             key_bloom_cols=[(c, types[c]) for c in commit.bucket_cols],
+            key_hashes=key_hashes,
         )
         touched = sorted(int(b) for b in delta)
         n_files = sum(len(es) for es in delta.values())
         lag: dict[str, Any] = {}
-        try:
-            stats = obs_out.get
-            oi = obs_in.get
-            n_in = oi["rows_in"]
-            if oi.get("event_ts_max") is not None:
-                now = time.time()
-                lag = {
-                    "event_ts_min": oi["event_ts_min"],
-                    "event_ts_max": oi["event_ts_max"],
-                    # freshest / oldest event's end-to-end replication lag
-                    # at commit time — the per-batch CDC SLO reading
-                    "ingest_lag_s": round(now - oi["event_ts_max"], 3),
-                    "ingest_lag_oldest_s": round(now - oi["event_ts_min"], 3),
-                }
-            n_out = stats["rows"] or 0
-            n_del = stats["deletes"] or 0
-            lsn_min, lsn_max = stats["lsn_min"], stats["lsn_max"]
-        except Exception:
-            # Catalyst folds an EMPTY sub-batch to a LocalRelation and prunes
-            # the CollectMetrics nodes, so Observation.get raises. Only that
-            # case may fall back (footer stats of zero files = all zeros,
-            # which is exact). If data files WERE written, the Observation
-            # failure is a real error — swallowing it would fabricate
-            # lineage (rows_in == rows_out, dedup_dropped == 0) — re-raise.
-            if n_files > 0:
-                raise
-            new_paths = [
-                os.path.join(self.root, e["path"])
-                for entries in delta.values()
-                for e in entries
-            ]
-            n_out, n_del, lsn_min, lsn_max = _footer_stats(new_paths)
-            n_in = n_out
+        if obs.get("event_ts_max") is not None:
+            now = time.time()
+            lag = {
+                "event_ts_min": obs["event_ts_min"],
+                "event_ts_max": obs["event_ts_max"],
+                # freshest / oldest event's end-to-end replication lag
+                # at commit time — the per-batch CDC SLO reading
+                "ingest_lag_s": round(now - obs["event_ts_max"], 3),
+                "ingest_lag_oldest_s": round(now - obs["event_ts_min"], 3),
+            }
+        n_in = obs["rows_in"]
+        n_out = obs["rows"] or 0
+        n_del = obs["deletes"] or 0
+        lsn_min, lsn_max = obs["lsn_min"], obs["lsn_max"]
         metrics = {
             "batch_id": batch_id,
             "version": None,  # assigned under the commit lock below
@@ -1574,6 +1582,166 @@ class LakeTable:
         metrics["wall_ms"] = int((time.time() - t0) * 1000)
         self._append_metrics(metrics)
         return metrics
+
+    def _merges_in_driver(
+        self, batch_df: DataFrame, commit: Commit, transform
+    ) -> bool:
+        """True when ``merge`` should run the batch in the driver: the
+        optimizer's planning-only size estimate (no job; exact for a local
+        relation, the file bytes for a file source, unbounded for an RDD)
+        is under ``DRIVER_MERGE_MAX_BYTES``, and any post-dedup transform
+        has an Arrow form that leaves the bucket columns alone (the driver
+        path hashes the bucket key before the transform)."""
+        if transform is not None and (
+            not hasattr(transform, "arrow")
+            or set(transform.columns) & set(commit.bucket_cols)
+        ):
+            return False
+        size = batch_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        return int(size) < DRIVER_MERGE_MAX_BYTES
+
+    def _write_delta_in_driver(
+        self, batch_df, columns, event_ts, commit: Commit, transform, out_dir: str
+    ) -> tuple[dict[str, Any], dict[int, list[int]] | None]:
+        """The driver merge path: ONE Spark job collects the projected batch
+        with Arrow, carrying ``F.hash(bucket_cols)``; pyarrow then keeps the
+        max-lsn image per key, applies the transform's Arrow form, buckets
+        by ``pmod(hash, n_buckets)`` and writes one file per bucket under
+        ``out_dir/_bucket=k/``. Returns the merge observation (the same keys
+        the Spark path observes) and each bucket's key hashes for its bloom
+        (None when the bucket-key types are not driver-hashable)."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from .bloom import KEY_HASH_TYPES
+
+        types = dict(commit.schema)
+        hashable = all(types[c].lower() in KEY_HASH_TYPES for c in commit.bucket_cols)
+        extra = [F.hash(*commit.bucket_cols).alias("_h")]
+        if event_ts is not None:
+            extra.append(event_ts.alias("_event_ts"))
+        t = batch_df.select(*columns).select("*", *extra).toArrow()
+        obs: dict[str, Any] = {"rows_in": t.num_rows}
+        if event_ts is not None:
+            mm = pc.min_max(t["_event_ts"])
+            obs["event_ts_min"], obs["event_ts_max"] = mm["min"].as_py(), mm["max"].as_py()
+        t = _last_images(t, list(commit.key_cols))
+        mm = pc.min_max(t[SYS_LSN])
+        obs.update(
+            rows=t.num_rows,
+            deletes=pc.sum(pc.cast(t[SYS_DELETED], pa.int64())).as_py(),
+            lsn_min=mm["min"].as_py(),
+            lsn_max=mm["max"].as_py(),
+        )
+        if transform is not None:
+            t = transform.arrow(t)
+        hashes = t["_h"].to_numpy()
+        buckets = np.mod(hashes.astype(np.int64), commit.n_buckets)
+        # the declared columns, then the system columns, all nullable: the
+        # schema Spark's writer gives the same rows
+        file_schema = (
+            to_arrow_schema(self._declared_schema(commit))
+            .append(pa.field(SYS_LSN, pa.int64()))
+            .append(pa.field(SYS_DELETED, pa.bool_()))
+        )
+        t = t.select(file_schema.names).cast(file_schema)
+        os.makedirs(out_dir)
+        key_hashes: dict[int, list[int]] = {}
+        attempt = uuid.uuid4()
+        for b in np.unique(buckets).tolist():
+            rows = np.flatnonzero(buckets == b)
+            key_hashes[b] = hashes[rows].tolist()
+            bucket_dir = os.path.join(out_dir, f"_bucket={b}")
+            os.makedirs(bucket_dir)
+            _write_lake_parquet(
+                t.take(rows),
+                os.path.join(bucket_dir, f"part-{b:05d}-{attempt}.c000.zstd.parquet"),
+            )
+        return obs, (key_hashes if hashable else None)
+
+    def _write_delta_with_spark(
+        self, spark, batch_df, columns, event_ts, commit: Commit,
+        dedup_strategy: str, transform, out_dir: str,
+    ) -> dict[str, Any]:
+        """The Spark merge path: project → exchange + dedup → transform →
+        ``partitionBy("_bucket")`` write to ``out_dir``, one job. Returns the
+        merge observation, taken from ``Observation``s on that job."""
+        from pyspark.sql import Observation
+
+        # Observations piggyback on the write job — merge stays a single
+        # pass (no separate count()/agg() jobs).
+        obs_in = Observation()
+        obs_out = Observation()
+        in_aggs = [F.count(F.lit(1)).alias("rows_in")]
+        if event_ts is not None:
+            in_aggs += [
+                F.min(event_ts).alias("event_ts_min"),
+                F.max(event_ts).alias("event_ts_max"),
+            ]
+        projected = batch_df.observe(obs_in, *in_aggs).select(*columns)
+        # Two exchange strategies, both ending bucket-aligned (partition id ==
+        # pmod(murmur3(bucket_cols), n_buckets) == _bucket, so the final
+        # partitionBy("_bucket") write needs no further repartition):
+        #
+        # * default ('window'/'max_by'): ONE exchange — an explicit
+        #   repartition(n_buckets, bucket_cols) that the dedup rides
+        #   (bucket_cols ⊆ key_cols satisfies its required distribution, so
+        #   Catalyst elides the dedup's own exchange). Every raw row image
+        #   crosses the wire once.
+        # * 'max_by_partial': the dedup aggregates FIRST on its own exchange —
+        #   Catalyst then plans a partial (map-side) aggregate, so duplicate
+        #   images of a key collapse inside each scan task and only partial
+        #   maxima cross the wire; a SECOND exchange bucket-aligns the
+        #   survivors (one row per key per batch). Two exchanges, but
+        #   exchange 1 shrinks by the within-task duplicate factor and
+        #   exchange 2 is O(distinct keys) — the winning trade whenever the
+        #   change feed revisits keys (hot-key/Zipf feeds, exactly where one
+        #   full-row exchange hurts most at 100 TB).
+        if dedup_strategy == "max_by_partial":
+            deduped = last_image_wins(
+                projected,
+                key_cols=commit.key_cols,
+                order_col=SYS_LSN,
+                strategy="max_by",
+            ).repartition(commit.n_buckets, *commit.bucket_cols)
+        else:
+            clustered = projected.repartition(commit.n_buckets, *commit.bucket_cols)
+            deduped = last_image_wins(
+                clustered,
+                key_cols=commit.key_cols,
+                order_col=SYS_LSN,
+                strategy=dedup_strategy,
+            )
+        deduped = deduped.observe(
+            obs_out,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.col(SYS_DELETED).cast("int")).alias("deletes"),
+            F.min(SYS_LSN).alias("lsn_min"),
+            F.max(SYS_LSN).alias("lsn_max"),
+        )
+        if transform is not None:
+            deduped = transform(deduped)
+        with_bucket = deduped.withColumn("_bucket", self._bucket_expr(commit))
+        # No repartition here: the batch is already clustered on bucket_cols
+        # (single fused exchange), so partition id == _bucket and
+        # partitionBy writes exactly one file per bucket per commit.
+        _require_ts_micros(spark)
+        with_bucket.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
+        try:
+            return {**obs_in.get, **obs_out.get}
+        except Exception:
+            # Catalyst folds an EMPTY sub-batch to a LocalRelation and
+            # prunes the CollectMetrics nodes, so Observation.get raises.
+            # Only that case may read as an empty observation; if data
+            # files WERE written, the failure is a real error — swallowing
+            # it would fabricate lineage — re-raise.
+            if os.path.isdir(out_dir) and any(
+                d.startswith("_bucket=") for d in os.listdir(out_dir)
+            ):
+                raise
+            return {"rows_in": 0, "rows": 0, "deletes": 0, "lsn_min": None, "lsn_max": None}
 
     def merge_partial(
         self,

@@ -213,7 +213,7 @@ def _decode_png(payload: bytes) -> np.ndarray:
         ctype = payload[pos + 4 : pos + 8]
         body = payload[pos + 8 : pos + 8 + size]
         if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", body)
+            ihdr = _unpack(">IIBBBBB", body, 0, len(body), "PNG IHDR")
         elif ctype == b"IDAT":
             idat.append(body)
         elif ctype == b"IEND":
@@ -319,6 +319,23 @@ def _lzw_decode(data: bytes, min_code_size: int) -> list[int]:
         prev = entry
 
 
+def _gif_sub_blocks(payload: bytes, pos: int) -> tuple[list[bytes], int]:
+    """The data sub-blocks starting at ``pos`` (length byte, then that
+    many bytes, up to a zero length) → (their bodies, the position after
+    the terminator). A GIF cut inside them raises ``ValueError``."""
+    chunks = []
+    while True:
+        if pos >= len(payload):
+            raise ValueError(f"torn GIF sub-block at {pos}")
+        ln = payload[pos]
+        if ln == 0:
+            return chunks, pos + 1
+        if pos + 1 + ln > len(payload):
+            raise ValueError(f"torn GIF sub-block at {pos}")
+        chunks.append(payload[pos + 1 : pos + 1 + ln])
+        pos += 1 + ln
+
+
 def _decode_gif(payload: bytes) -> np.ndarray:
     """GIF87a/89a first frame → (h, w, 3) uint8: logical screen + color
     tables, extension-block skipping, sub-block reassembly, LZW inflate,
@@ -327,7 +344,8 @@ def _decode_gif(payload: bytes) -> np.ndarray:
     IDAT image)."""
     if payload[:4] != b"GIF8" or payload[4:6] not in (b"7a", b"9a"):
         raise ValueError("not a GIF payload")
-    sw, sh, packed, _bg, _ar = struct.unpack_from("<HHBBB", payload, 6)
+    end = len(payload)
+    sw, sh, packed, _bg, _ar = _unpack("<HHBBB", payload, 6, end, "GIF logical screen")
     pos = 13
     gct = None
     if packed & 0x80:
@@ -340,14 +358,11 @@ def _decode_gif(payload: bytes) -> np.ndarray:
         if block == 0x3B:  # trailer
             break
         if block == 0x21:  # extension: label + sub-blocks
-            pos += 1
-            while payload[pos]:
-                pos += 1 + payload[pos]
-            pos += 1
+            _, pos = _gif_sub_blocks(payload, pos + 1)
             continue
         if block != 0x2C:
             raise ValueError(f"unknown GIF block {block:#04x} at {pos - 1}")
-        _lx, _ty, w, h, ipacked = struct.unpack_from("<HHHHB", payload, pos)
+        _lx, _ty, w, h, ipacked = _unpack("<HHHHB", payload, pos, end, "GIF image descriptor")
         pos += 9
         pal = gct
         if ipacked & 0x80:
@@ -356,14 +371,8 @@ def _decode_gif(payload: bytes) -> np.ndarray:
             pos += n * 3
         if pal is None:
             raise ValueError("GIF image has no color table")
-        mcs = payload[pos]
-        pos += 1
-        chunks = []
-        while payload[pos]:
-            ln = payload[pos]
-            chunks.append(payload[pos + 1 : pos + 1 + ln])
-            pos += 1 + ln
-        pos += 1
+        (mcs,) = _unpack("<B", payload, pos, end, "GIF LZW code size")
+        chunks, pos = _gif_sub_blocks(payload, pos + 1)
         idx = np.array(_lzw_decode(b"".join(chunks), mcs), dtype=np.int32)
         if len(idx) < w * h:
             raise ValueError(

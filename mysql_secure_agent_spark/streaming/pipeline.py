@@ -29,12 +29,53 @@ import os
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.anonymize import anonymize, anonymize_arrow
 from ..functions.normalize import normalize_text_udf
 from ..lake.table import LakeTable
 from ..operators.skew import salted_repartition
 from ..schemas import CHANGELOG_SCHEMA, RAW_CHANGELOG_SCHEMA
+
+
+class PostDedupTransform:
+    """The pipeline's post-dedup stage — normalize ``text``, then anonymize
+    the ``hashed`` columns — in the two forms ``LakeTable.merge`` runs:
+    called on a Spark DataFrame (the Spark merge path, SCD-2 history) and
+    ``arrow(table)`` on a pyarrow table (the driver merge path). Both apply
+    the same functions in the same order, so they write the same bytes."""
+
+    def __init__(self, normalize: bool, hashed: list[str], salt: str):
+        self.normalize = normalize
+        self.hashed = list(hashed)
+        self.salt = salt
+
+    @property
+    def columns(self) -> list[str]:
+        """The columns this transform may rewrite."""
+        return (["text"] if self.normalize else []) + self.hashed
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        out = df
+        if self.normalize and "text" in out.columns:
+            out = out.withColumn("text", normalize_text_udf(F.col("text")))
+        if self.hashed:
+            out = anonymize(out, self.hashed, self.salt)
+        return out
+
+    def arrow(self, t: pa.Table) -> pa.Table:
+        names = t.column_names
+        if self.normalize and "text" in names:
+            text = normalize_text_udf.func(t["text"].to_pandas())
+            t = t.set_column(
+                names.index("text"), "text",
+                pa.array(text, pa.string(), from_pandas=True),
+            )
+        for c in self.hashed:
+            if c in names:
+                t = t.set_column(names.index(c), c, anonymize_arrow(t[c], self.salt))
+        return t
 
 
 class CdcPipeline:
@@ -287,7 +328,7 @@ class CdcPipeline:
                 out = out.withColumn("_present", F.array_remove("_present", c))
         return out
 
-    def _post_dedup(self):
+    def _post_dedup(self) -> "PostDedupTransform | None":
         """Normalization + anonymization run AFTER dedup: one row per key
         instead of every change image, riding the dedup shuffle's partitions
         (no extra exchange). Final table content is identical — the winning
@@ -303,18 +344,7 @@ class CdcPipeline:
         if not self.normalize and not hashed:
             return None
         salt = self.config.crypto_salt if self.config else ""
-
-        def transform(df: DataFrame) -> DataFrame:
-            out = df
-            if self.normalize and "text" in out.columns:
-                out = out.withColumn("text", normalize_text_udf(F.col("text")))
-            if hashed:
-                from ..functions.anonymize import anonymize
-
-                out = anonymize(out, hashed, salt)
-            return out
-
-        return transform
+        return PostDedupTransform(self.normalize, hashed, salt)
 
     # ---------------------------------------------------------------- apply
     def apply_batch(

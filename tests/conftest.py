@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from mysql_secure_agent_spark.lake import table as table_mod  # noqa: E402
 from mysql_secure_agent_spark.session import get_spark  # noqa: E402
 
 
@@ -13,6 +14,23 @@ from mysql_secure_agent_spark.session import get_spark  # noqa: E402
 def spark():
     s = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
     yield s
+
+
+# LakeTable.merge runs a small batch in the driver and a large one as a
+# Spark write job. The merge-heavy modules below run once per path: as
+# collected, with every merge forced into the driver, and again through
+# test_spark_merge_path.py, with every merge forced onto the Spark job.
+MERGE_PATH_MODULES = {"test_cdc_replay", "test_changefeed", "test_key_bloom", "test_wap"}
+
+
+@pytest.fixture(autouse=True)
+def merge_path(request, monkeypatch):
+    module = request.module.__name__.rsplit(".", 1)[-1]
+    if module == "test_spark_merge_path":
+        monkeypatch.setattr(table_mod, "DRIVER_MERGE_MAX_BYTES", 0)
+    elif module in MERGE_PATH_MODULES:
+        # above any size estimate, the unbounded one of an RDD included
+        monkeypatch.setattr(table_mod, "DRIVER_MERGE_MAX_BYTES", float("inf"))
 
 
 @pytest.fixture()

@@ -11,6 +11,8 @@ import pytest
 
 from mysql_secure_agent_spark.operators.multimodal import (
     _decode_bmp,
+    _decode_gif,
+    _decode_png,
     _decode_ppm,
     _decode_wav,
     _resize_nearest,
@@ -18,6 +20,7 @@ from mysql_secure_agent_spark.operators.multimodal import (
     decode_audio_batch,
     decode_image_batch,
     encode_bmp,
+    encode_gif,
     encode_ppm,
     encode_wav,
 )
@@ -84,8 +87,22 @@ def _short_fmt_chunk() -> bytes:
         (_decode_bmp, encode_bmp(3, 2, 1)[:30]),  # info header cut short
         (_decode_wav, encode_wav(4, 1)[: 12 + 8 + 10]),  # fmt body cut short
         (_decode_wav, _short_fmt_chunk()),  # fmt chunk smaller than PCM fields
+        # IHDR chunk declaring 5 of its 13 bytes
+        (_decode_png, b"\x89PNG\r\n\x1a\n" + (5).to_bytes(4, "big") + b"IHDR" + bytes(9)),
+        (_decode_gif, b"GIF89a" + bytes(3)),  # logical screen cut short
+        # encode_gif: 13-byte header, 768-byte color table, an 8-byte
+        # graphics-control extension at 781, the image descriptor at 789
+        # and its LZW sub-blocks from 800
+        (_decode_gif, encode_gif(16, 16, 3)[:784]),  # cut inside the extension
+        (_decode_gif, encode_gif(16, 16, 3)[:793]),  # cut inside the descriptor
+        (_decode_gif, encode_gif(16, 16, 3)[:799]),  # cut before the code size
+        (_decode_gif, encode_gif(16, 16, 3)[:850]),  # cut inside the image data
     ],
-    ids=["bmp-file-header", "bmp-info-header", "wav-fmt-cut", "wav-fmt-short-chunk"],
+    ids=[
+        "bmp-file-header", "bmp-info-header", "wav-fmt-cut", "wav-fmt-short-chunk",
+        "png-ihdr-short", "gif-screen", "gif-extension-cut", "gif-descriptor-cut",
+        "gif-code-size-cut", "gif-image-data-cut",
+    ],
 )
 def test_torn_headers_raise_value_error(decode, payload):
     # the contracted error for torn media is ValueError, never struct.error
