@@ -38,13 +38,6 @@ from .bucketing import hash_int, spark_hash_typed
 KEY_BLOOM_BITS = 1 << 15   # 4 KiB of bits per filter
 KEY_BLOOM_K = 4            # probes per key
 KEY_BLOOM_MAX_ROWS = 4096  # only files at/below this get a manifest bloom
-# bucket-key DDL types ``key_hash`` accepts as pyarrow reads their values
-# (a DATE reads as ``datetime.date``, which the int codec refuses): the
-# types a file's bloom can be built for, and a lookup can probe
-KEY_HASH_TYPES = frozenset(
-    {"tinyint", "smallint", "int", "integer", "bigint", "long",
-     "string", "varchar", "boolean", "binary"}
-)
 
 
 def key_hash(values, ddl_types: list[str]) -> int:

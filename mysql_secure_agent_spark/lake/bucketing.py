@@ -23,6 +23,7 @@ Parity with ``F.hash`` is asserted by a randomized test
 
 from __future__ import annotations
 
+import datetime
 import struct
 
 _MASK = 0xFFFFFFFF
@@ -83,6 +84,33 @@ def hash_bytes(data: bytes, seed: int) -> int:
     return _fmix(h1, n)
 
 
+_EPOCH_DAY = datetime.date(1970, 1, 1)
+
+
+def _days(v) -> int:
+    """A DATE value as Spark hashes it: days since the epoch (pyarrow and
+    PySpark hand it over as ``datetime.date``)."""
+    return v if isinstance(v, int) else (v - _EPOCH_DAY).days
+
+
+# bucket-key DDL type → its Murmur3 codec, (value, seed) → hash
+_KEY_CODECS = {
+    **dict.fromkeys(
+        ("tinyint", "smallint", "int", "integer"), lambda v, h: hash_int(int(v), h)
+    ),
+    "date": lambda v, h: hash_int(_days(v), h),
+    **dict.fromkeys(("bigint", "long"), lambda v, h: hash_long(int(v), h)),
+    **dict.fromkeys(
+        ("string", "varchar"), lambda v, h: hash_bytes(str(v).encode("utf-8"), h)
+    ),
+    "boolean": lambda v, h: hash_int(1 if v else 0, h),
+    "binary": lambda v, h: hash_bytes(bytes(v), h),
+}
+# the bucket-key DDL types ``spark_hash_typed`` hashes (any other raises
+# TypeError): the keys a driver bucket id or a file's key bloom can cover
+HASHABLE_KEY_TYPES = frozenset(_KEY_CODECS)
+
+
 def spark_hash_typed(values, ddl_types: list[str]) -> int:
     """``F.hash(*cols)`` for driver-side scalars: seed 42, each value's hash
     feeds the next as seed; None leaves the running hash unchanged (Spark's
@@ -99,19 +127,10 @@ def spark_hash_typed(values, ddl_types: list[str]) -> int:
     for v, dt in zip(values, ddl_types):
         if v is None:
             continue
-        t = dt.lower()
-        if t in ("tinyint", "smallint", "int", "integer", "date"):
-            h = hash_int(int(v), h)
-        elif t in ("bigint", "long"):
-            h = hash_long(int(v), h)
-        elif t in ("string", "varchar"):
-            h = hash_bytes(str(v).encode("utf-8"), h)
-        elif t == "boolean":
-            h = hash_int(1 if v else 0, h)
-        elif t == "binary":
-            h = hash_bytes(bytes(v), h)
-        else:
+        codec = _KEY_CODECS.get(dt.lower())
+        if codec is None:
             raise TypeError(f"unsupported bucket-key DDL type: {dt}")
+        h = codec(v, h)
     return h - (1 << 32) if h >= (1 << 31) else h
 
 

@@ -260,8 +260,10 @@ def _entry_intersects(
 # the driver (one Arrow collect, then pyarrow dedup/bucket/write); larger
 # batches run the Spark write job. On a 4-core host a live-tail batch of
 # ~1,200 events (~65 KB) merged in ~0.1 s there against ~0.6 s as a Spark
-# job; a binlog backfill trigger of 20k decoded events (~1.7 MB) stays on
-# the Spark path.
+# job. A binlog backfill trigger of 20k decoded events (~1.7 MB) stays on
+# the Spark path: with a 4 MiB cut the cdcbench backfill ingested 1.42x
+# faster, but its lookups ran 5-8% slower and its deltas took 1.3% more
+# bytes per row (ROADMAP D6).
 DRIVER_MERGE_MAX_BYTES = 1 << 20
 
 
@@ -1615,14 +1617,19 @@ class LakeTable:
         import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from .bloom import KEY_HASH_TYPES
+        from .bucketing import HASHABLE_KEY_TYPES
 
         types = dict(commit.schema)
-        hashable = all(types[c].lower() in KEY_HASH_TYPES for c in commit.bucket_cols)
-        extra = [F.hash(*commit.bucket_cols).alias("_h")]
-        if event_ts is not None:
-            extra.append(event_ts.alias("_event_ts"))
-        t = batch_df.select(*columns).select("*", *extra).toArrow()
+        hashable = all(types[c].lower() in HASHABLE_KEY_TYPES for c in commit.bucket_cols)
+        # the lag bound reads the UNPROJECTED batch (like the Spark path's
+        # observation): after a rename or drop of ``lag_col`` the feed still
+        # ships it, but the projection no longer holds it
+        lag = [] if event_ts is None else [event_ts.alias("_event_ts")]
+        t = (
+            batch_df.select(*columns, *lag)
+            .select("*", F.hash(*commit.bucket_cols).alias("_h"))
+            .toArrow()
+        )
         obs: dict[str, Any] = {"rows_in": t.num_rows}
         if event_ts is not None:
             mm = pc.min_max(t["_event_ts"])

@@ -167,6 +167,28 @@ def test_feed_with_pre_rename_column_name(spark, tmp_path, monkeypatch):
     assert "speaker" in tables["driver"].read(spark).columns
 
 
+@pytest.mark.parametrize("ddl", ["rename", "drop"])
+def test_lag_col_after_rename_or_drop(spark, tmp_path, monkeypatch, ddl):
+    """The feed keeps shipping ``ts`` after the table renames or drops it:
+    the lag bound still comes from the batch, while the projection no
+    longer holds a ``ts`` column."""
+
+    def scenario(root):
+        tbl = LakeTable.create(root, SCHEMA, KEY, n_buckets=4)
+        tbl.merge(spark, _batch(spark, 1, 0), "b0", lag_col="ts")
+        if ddl == "rename":
+            tbl.rename_column("ts", "happened_at")
+        else:
+            tbl.drop_column("ts")
+        m = tbl.merge(spark, _batch(spark, 2, 1000), "b1", lag_col="ts")
+        return tbl, m
+
+    out = _run_both(monkeypatch, tmp_path, scenario)
+    _assert_equivalent(spark, {k: t for k, (t, _) in out.items()})
+    bounds = [(m["event_ts_min"], m["event_ts_max"]) for _, m in out.values()]
+    assert bounds[0] == bounds[1] and None not in bounds[0]
+
+
 def test_after_add_column_and_modify_column_type(spark, tmp_path, monkeypatch):
     def scenario(root):
         tbl = LakeTable.create(root, SCHEMA, KEY, n_buckets=4)
@@ -205,6 +227,44 @@ def test_compound_bucket_cols(spark, tmp_path, monkeypatch):
         return tbl
 
     _assert_equivalent(spark, _run_both(monkeypatch, tmp_path, scenario))
+
+
+def test_date_bucket_key(spark, tmp_path, monkeypatch):
+    """A DATE bucket key: both paths bloom the deltas (the Spark path from
+    the pyarrow ``datetime.date`` values, the driver path from ``F.hash``)
+    with the same bytes, and a lookup prunes by them."""
+    schema = T.StructType(
+        [
+            T.StructField("day", T.DateType(), False),
+            T.StructField("n", T.IntegerType(), True),
+        ]
+    )
+    arrow = pa.schema([("op", pa.string()), ("day", pa.date32()), ("n", pa.int32()),
+                       ("source_lsn", pa.int64())])
+    d0 = dt.date(2026, 3, 1)
+
+    def scenario(root):
+        tbl = LakeTable.create(root, schema, ["day"], n_buckets=4)
+        for i in range(2):
+            rng = random.Random(60 + i)
+            rows = [
+                {"op": rng.choice("IUD"), "day": d0 + dt.timedelta(days=rng.randrange(-400, 400)),
+                 "n": rng.randrange(100), "source_lsn": 1000 * i + j}
+                for j in range(80)
+            ]
+            tbl.merge(spark, spark.createDataFrame(pa.Table.from_pylist(rows, schema=arrow)), f"b{i}")
+        return tbl
+
+    tables = _run_both(monkeypatch, tmp_path, scenario)
+    a, b = tables["spark"], tables["driver"]
+    assert sorted(a.read(spark).collect()) == sorted(b.read(spark).collect())
+    assert _entries(a) == _entries(b)
+    assert all("key_bloom" in e for es in _entries(b).values() for e in es)
+    live = b.read(spark).first()
+    assert b.lookup(spark, {"day": live["day"]}).collect() == [live]
+    for t in (a, b):
+        report = fsck.verify(t, spark, deep=True)
+        assert report["ok"], report["errors"]
 
 
 def test_replayed_batch_is_skipped(spark, tmp_path, monkeypatch):

@@ -1,5 +1,6 @@
 """Driver-side Murmur3 parity + LakeTable point lookup."""
 
+import datetime as dt
 import random
 import string
 import time
@@ -59,6 +60,13 @@ def test_murmur3_parity_with_spark_hash(spark):
         assert row["hi"] == spark_hash_typed([i], ["int"]), i
         assert row["hl"] == spark_hash_typed([l], ["bigint"]), l
         assert row["hsi"] == spark_hash_typed([s, i], ["string", "int"]), (s, i)
+
+    # a DATE hashes as its days since the epoch, as the datetime.date that
+    # pyarrow and PySpark hand back
+    days = [dt.date(1970, 1, 1), dt.date(1969, 12, 31), dt.date(2026, 3, 1), dt.date(1, 1, 1)]
+    got = spark.createDataFrame([(d,) for d in days], "d date").select(F.hash("d")).collect()
+    for (h,), d in zip(got, days):
+        assert h == spark_hash_typed([d], ["date"]), d
 
 
 def test_murmur3_null_passthrough(spark):
