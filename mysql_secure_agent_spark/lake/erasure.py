@@ -33,16 +33,24 @@ from __future__ import annotations
 import os
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
+import pyarrow as pa
+from pyspark.sql import SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .bucketing import bucket_for
-from .table import LakeTable
+from .table import LakeTable, _type_from_ddl
 
 
 def _key_frame(
-    spark: SparkSession, table: LakeTable, keys: list[dict[str, Any]]
+    spark: SparkSession,
+    table: LakeTable,
+    keys: list[dict[str, Any]],
+    base_lsn: int | None = None,
 ):
+    """The keys as a frame built from Arrow: a local relation with an exact
+    size estimate, so a tombstone merge of a few keys runs in the driver.
+    With ``base_lsn`` the rows are ``D`` tombstones in key order at
+    ``source_lsn = base_lsn + i``."""
     commit = table.commit_at(resolve=False)
     types = dict(commit.schema)
     kc = commit.key_cols
@@ -50,9 +58,22 @@ def _key_frame(
         missing = [c for c in kc if c not in k]
         if missing:
             raise KeyError(f"erase key {k} missing key columns {missing}")
-    ddl = ", ".join(f"{c} {types[c]}" for c in kc)
-    rows = [tuple(k[c] for c in kc) for k in keys]
-    return spark.createDataFrame(rows, ddl), commit
+    schema = to_arrow_schema(
+        T.StructType([T.StructField(c, _type_from_ddl(types[c])) for c in kc])
+    )
+    # NULLs first, like an ascending Spark sort
+    rows = sorted(
+        (tuple(k[c] for c in kc) for k in keys),
+        key=lambda r: [(v is not None, v) for v in r],
+    )
+    cols = {c: [r[i] for r in rows] for i, c in enumerate(kc)}
+    if base_lsn is not None:
+        schema = schema.append(pa.field("op", pa.string())).append(
+            pa.field("source_lsn", pa.int64())
+        )
+        cols["op"] = ["D"] * len(rows)
+        cols["source_lsn"] = [base_lsn + i for i in range(len(rows))]
+    return spark.createDataFrame(pa.Table.from_pydict(cols, schema=schema)), commit
 
 
 def erase_keys(
@@ -83,7 +104,10 @@ def erase_keys(
 
     if not keys:
         return {"erased": True, "survivors": [], "buckets": []}
-    key_df, commit = _key_frame(spark, table, keys)
+    # 1. tombstones at fresh lsns (monotone past everything applied), so
+    # any concurrent replay of older segments cannot resurrect the keys
+    base_lsn = applied_lsn_watermark(table) + 1
+    tomb, commit = _key_frame(spark, table, keys, base_lsn)
     types = dict(commit.schema)
     btypes = [types[c] for c in commit.bucket_cols]
     buckets = sorted(
@@ -94,21 +118,6 @@ def erase_keys(
         }
     )
 
-    # 1. tombstones at fresh lsns (monotone past everything applied), so
-    # any concurrent replay of older segments cannot resurrect the keys
-    base_lsn = applied_lsn_watermark(table) + 1
-    # the erase request is a handful of keys (a GDPR ticket, not a feed):
-    # the single-partition window is driver-bounded by len(keys)
-    tomb = key_df.withColumns(
-        {
-            "op": F.lit("D"),
-            "source_lsn": (
-                F.lit(base_lsn)
-                + F.row_number().over(Window.orderBy(*commit.key_cols))
-                - 1
-            ).cast("long"),
-        }
-    )
     table.merge(spark, tomb, batch_id or f"erase.{base_lsn}")
 
     # 2. rewrite exactly the affected buckets: the live listing afterwards

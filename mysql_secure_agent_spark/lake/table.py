@@ -171,33 +171,18 @@ def _file_key_stats(path: str, cols: list[str]) -> dict[str, list[Any]]:
     return out
 
 
-def _file_key_bloom(
-    path: str, cols: list[str], ddl_types: list[str]
-) -> dict[str, Any] | None:
-    """Manifest bloom over the file's bucket-key tuples (``lake.bloom``) —
-    recorded only for files at/below ``KEY_BLOOM_MAX_ROWS`` rows (the
-    micro-batch deltas range stats cannot prune; a bulk file's bloom would
-    bloat driver metadata and compaction will key-sort it soon anyway) and
-    only when every bucket-key type is driver-hashable. The column read is
-    pruned to the key columns; the row cap comes from the footer first, so
-    an over-cap file costs one metadata read and zero data pages."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def _file_key_bloom(hashes: list[int] | None) -> dict[str, Any] | None:
+    """Manifest bloom over a file's bucket-key hashes (``F.hash``, the h1 of
+    ``lake.bloom``) — recorded only for files at/below ``KEY_BLOOM_MAX_ROWS``
+    rows (the micro-batch deltas range stats cannot prune; a bulk file's
+    bloom would bloat driver metadata and compaction will key-sort it soon
+    anyway). ``hashes`` is None when the bucket-key types are not
+    driver-hashable: a lookup could not probe such a bloom."""
+    from .bloom import KEY_BLOOM_MAX_ROWS, build_bloom
 
-    from .bloom import KEY_BLOOM_MAX_ROWS, build_bloom, key_hash
-
-    pf = pq.ParquetFile(path)
-    if pf.metadata.num_rows > KEY_BLOOM_MAX_ROWS:
+    if hashes is None or len(hashes) > KEY_BLOOM_MAX_ROWS:
         return None
-    try:
-        tbl = pf.read(columns=cols)
-    except (KeyError, pa.ArrowInvalid):
-        return None
-    tuples = zip(*(tbl.column(c).to_pylist() for c in cols))
-    try:
-        return build_bloom(key_hash(list(t), ddl_types) for t in tuples)
-    except TypeError:  # un-hashable bucket-key type — stays un-prunable
-        return None
+    return build_bloom(hashes)
 
 
 def _last_images(t, keys: list[str]):
@@ -215,8 +200,8 @@ def _last_images(t, keys: list[str]):
 
 
 def _write_lake_parquet(t, path: str) -> None:
-    """Write one lake data file from the driver in the encoding Spark's
-    writer gives the same rows: zstd level 3, no embedded Arrow schema,
+    """Write one lake data file with pyarrow in the encoding Spark's writer
+    gives the same rows: zstd level 3, no embedded Arrow schema,
     and dictionary pages only for flat columns with fewer distinct values
     than half the rows (parquet-mr falls back to PLAIN for the rest, such as
     free text, timestamps and lsns)."""
@@ -233,6 +218,91 @@ def _write_lake_parquet(t, path: str) -> None:
         t, path, compression="zstd", compression_level=3,
         use_dictionary=dictionary, store_schema=False,
     )
+
+
+def _merge_meta_schema():
+    """The metadata row ``_merge_kernel`` returns for each bucket it wrote."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            ("bucket", pa.int32()),
+            ("rows_in", pa.int64()),
+            ("rows", pa.int64()),
+            ("deletes", pa.int64()),
+            ("lsn_min", pa.int64()),
+            ("lsn_max", pa.int64()),
+            ("event_ts_min", pa.float64()),
+            ("event_ts_max", pa.float64()),
+            ("key_hashes", pa.list_(pa.int32())),
+        ]
+    )
+
+
+def _merge_kernel(
+    t, key_cols: list[str], n_buckets: int, file_schema, transform,
+    out_dir: str, hashable: bool,
+):
+    """The data work of one merge, on a pyarrow table of projected change
+    images carrying ``_h = F.hash(bucket_cols)`` (and ``_event_ts`` when
+    the merge has a lag column): the whole batch in the driver placement,
+    one bucket partition of it in the executor placement.
+
+    Keeps the max-``source_lsn`` image per key (``_last_images``), applies
+    the transform's Arrow form, and writes one file per bucket,
+    ``out_dir/_bucket=k/part-{k:05d}.c000.zstd.parquet``. Each file is
+    written under a unique temp name and moved into place with
+    ``os.replace``, so a retried or speculative task replaces its file
+    instead of adding a second one. Returns one ``_merge_meta_schema`` row
+    per bucket: the input and output counts, the lsn bounds of the kept
+    images, the event-time bounds of the input, and the key hashes for the
+    file's bloom (only for buckets of at most ``KEY_BLOOM_MAX_ROWS`` rows
+    whose key types the driver can hash)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from .bloom import KEY_BLOOM_MAX_ROWS
+
+    b_in = np.mod(t["_h"].to_numpy().astype(np.int64), n_buckets)
+    ts = t["_event_ts"] if "_event_ts" in t.column_names else None
+    t = _last_images(t, key_cols)
+    if transform is not None:
+        t = transform.arrow(t)
+    hashes = t["_h"].to_numpy()
+    buckets = np.mod(hashes.astype(np.int64), n_buckets)
+    t = t.select(file_schema.names).cast(file_schema)
+    rows = []
+    for b in np.unique(buckets).tolist():
+        sel = np.flatnonzero(buckets == b)
+        part = t.take(sel)
+        bucket_dir = os.path.join(out_dir, f"_bucket={b}")
+        os.makedirs(bucket_dir, exist_ok=True)
+        path = os.path.join(bucket_dir, f"part-{b:05d}.c000.zstd.parquet")
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        _write_lake_parquet(part, tmp)
+        os.replace(tmp, path)
+        lsn = pc.min_max(part[SYS_LSN])
+        mask = b_in == b
+        ts_b = None if ts is None else pc.min_max(ts.filter(pa.array(mask)))
+        rows.append(
+            {
+                "bucket": b,
+                "rows_in": int(np.count_nonzero(mask)),
+                "rows": part.num_rows,
+                "deletes": pc.sum(pc.cast(part[SYS_DELETED], pa.int64())).as_py(),
+                "lsn_min": lsn["min"].as_py(),
+                "lsn_max": lsn["max"].as_py(),
+                "event_ts_min": None if ts_b is None else ts_b["min"].as_py(),
+                "event_ts_max": None if ts_b is None else ts_b["max"].as_py(),
+                "key_hashes": (
+                    hashes[sel].tolist()
+                    if hashable and sel.size <= KEY_BLOOM_MAX_ROWS
+                    else None
+                ),
+            }
+        )
+    return pa.Table.from_pylist(rows, schema=_merge_meta_schema())
 
 
 def _entry_intersects(
@@ -256,14 +326,13 @@ def _entry_intersects(
     return True
 
 
-# A merge whose batch the optimizer estimates under this many bytes runs in
-# the driver (one Arrow collect, then pyarrow dedup/bucket/write); larger
-# batches run the Spark write job. On a 4-core host a live-tail batch of
-# ~1,200 events (~65 KB) merged in ~0.1 s there against ~0.6 s as a Spark
-# job. A binlog backfill trigger of 20k decoded events (~1.7 MB) stays on
-# the Spark path: with a 4 MiB cut the cdcbench backfill ingested 1.42x
-# faster, but its lookups ran 5-8% slower and its deltas took 1.3% more
-# bytes per row (ROADMAP D6).
+# Where a merge runs ``_merge_kernel``: a batch the optimizer estimates under
+# this many bytes runs it in the driver, on one Arrow collect; larger batches
+# run it in the executors, one task per bucket. Both placements write the same
+# files. On a 4-core host a live-tail batch of ~1,200 events (~65 KB) merged
+# in ~0.1 s in the driver against ~0.6 s as a shuffle job. A binlog backfill
+# trigger of 20k decoded events (~1.7 MB) stays in the executors: with a
+# 4 MiB cut its lookup p50 was x1.10 slower in 6 of 6 cdcbench pairs.
 DRIVER_MERGE_MAX_BYTES = 1 << 20
 
 
@@ -673,7 +742,8 @@ class LakeTable:
         """Changefeed floor after a rewrite that collapses ``entries``: the
         highest lsn they hold, never below ``commit``'s floor. Every file
         the engine writes records its lsn range — merge deltas from the
-        merge Observation, rewrites from their footers (``_rewrite``).
+        merge kernel's metadata rows, rewrites from their footers
+        (``_rewrite``).
         A table written before purge/modify recorded it can still list
         files without one (a table root reopened across runs, as
         ``tools/cluster_job.py`` does); those fall back to one footer scan
@@ -691,8 +761,7 @@ class LakeTable:
         kind: str,
         footer_lsn_stats: bool = False,
         key_stats_cols: list[str] | None = None,
-        key_bloom_cols: list[tuple[str, str]] | None = None,
-        key_hashes: dict[int, list[int]] | None = None,
+        key_hashes: dict[int, list[int] | None] | None = None,
     ) -> dict[str, list[dict[str, Any]]]:
         """Manifest entries for the ``_bucket=``-partitioned parquet files a
         rewrite just wrote under ``out_dir`` — the ONE implementation every
@@ -700,12 +769,12 @@ class LakeTable:
         files through, so a new stats field lands in all manifests at once
         instead of silently diverging between them. ``footer_lsn_stats``
         reads each file's footer for its lsn range (``_rewrite``; merge
-        deltas get exact batch-level stamps from the merge Observation);
-        ``key_stats_cols`` additionally records per-file key min/max for
-        listing-level range pruning of key-sorted files. ``key_hashes``
-        (bucket → the ``F.hash`` of every row's bucket key, from a driver
-        merge) builds each bucket's bloom from those hashes instead of
-        re-reading the key columns; the bloom bytes are the same."""
+        deltas get exact batch-level stamps from the merge kernel's
+        metadata rows); ``key_stats_cols`` additionally records per-file
+        key min/max for listing-level range pruning of key-sorted files.
+        ``key_hashes`` (bucket → the ``F.hash`` of every row's bucket key,
+        from a merge) gives each bucket's file its key bloom
+        (``_file_key_bloom``)."""
         todo: list[tuple[str, str, str]] = []  # (bucket, rel path, abs path)
         for d in sorted(os.listdir(out_dir)):
             if not d.startswith("_bucket="):
@@ -729,29 +798,18 @@ class LakeTable:
                 if ks:
                     entry["key_stats"] = ks
             if key_hashes is not None:
-                from .bloom import KEY_BLOOM_MAX_ROWS, build_bloom
-
-                hs = key_hashes[int(b)]
-                if len(hs) <= KEY_BLOOM_MAX_ROWS:
-                    entry["key_bloom"] = build_bloom(hs)
-            elif key_bloom_cols:
-                kb = _file_key_bloom(
-                    abs_p,
-                    [c for c, _ in key_bloom_cols],
-                    [t for _, t in key_bloom_cols],
-                )
+                kb = _file_key_bloom(key_hashes.get(int(b)))
                 if kb:
                     entry["key_bloom"] = kb
             return entry
 
-        # The per-file stats/bloom builders are pyarrow footer + column
-        # reads — IO-bound and GIL-releasing. A merge writes up to
-        # n_buckets delta files per commit and this walk sat on the
-        # driver's critical path sequentially (~2 ms/file → ~0.25 s of
-        # every bench merge at 128 buckets); a small thread pool cuts the
-        # fixed cost without changing a single recorded byte.
-        reads = footer_lsn_stats or key_stats_cols or (key_bloom_cols and key_hashes is None)
-        if len(todo) > 1 and reads:
+        # The per-file stats builders are pyarrow footer reads — IO-bound
+        # and GIL-releasing. A merge writes up to n_buckets delta files per
+        # commit and this walk sat on the driver's critical path
+        # sequentially (~2 ms/file → ~0.25 s of every bench merge at 128
+        # buckets); a small thread pool cuts the fixed cost without
+        # changing a single recorded byte.
+        if len(todo) > 1 and (footer_lsn_stats or key_stats_cols):
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=min(8, len(todo))) as ex:
@@ -1336,7 +1394,6 @@ class LakeTable:
         spark: SparkSession,
         batch_df: DataFrame,
         batch_id: str | int,
-        dedup_strategy: str = "window",
         op_col: str = "op",
         post_dedup_transform=None,
         wap_id: str | None = None,
@@ -1348,39 +1405,40 @@ class LakeTable:
         table schema; missing ones null-filled) + ``source_lsn``. Upserts keep
         the new image; deletes become tombstones. Within the batch the max-LSN
         image per key wins (the reference applies events strictly in log
-        order on one thread, ``Updater.java:148-186`` — this window re-creates
-        that total-order semantics under parallelism).
+        order on one thread, ``Updater.java:148-186`` — the max-lsn rule
+        re-creates that total-order semantics under parallelism).
 
         Returns merge metrics. Idempotent per ``batch_id``: a replayed batch
         is skipped (exactly-once effect).
 
-        Two execution paths, chosen by size, write the same table state:
+        One kernel (``_merge_kernel``, pyarrow) does the data work: keep the
+        max-``source_lsn`` image per key, run the transform's Arrow form,
+        write one zstd parquet file per bucket, and return one metadata row
+        per bucket. It runs in one of two placements, chosen by size, which
+        write the same table state (recorded as the metrics' ``placement``):
 
-        * **Driver** — when the optimizer's planning-only size estimate of
+        * **driver** — when the optimizer's planning-only size estimate of
           ``batch_df`` is under ``DRIVER_MERGE_MAX_BYTES`` (1 MiB; a
-          module constant, not an option). One Spark job collects the
-          projected batch with Arrow, carrying ``F.hash(bucket_cols)``;
-          pyarrow keeps the max-``source_lsn`` image per key, runs the
-          transform's Arrow form, buckets and writes one zstd parquet file
-          per bucket. Blooms come from the collected hashes. On this path
-          the dedup is always exact max-lsn: ``dedup_strategy`` does not
-          apply.
-        * **Spark** — larger batches (and RDD-backed ones, whose size is
-          unknown): one write job that exchanges on the bucket key, dedups
-          per ``dedup_strategy`` and writes ``partitionBy("_bucket")``.
+          module constant, not an option): one Spark job collects the
+          projected batch with Arrow and the driver runs the kernel on it.
+        * **executor** — larger batches (and RDD-backed ones, whose size is
+          unknown): the projected batch is repartitioned on the bucket key
+          into ``n_buckets`` partitions and each task runs the kernel on its
+          bucket (``mapInArrow``); the metadata rows come back in the same
+          job. One exchange, no further shuffle.
 
-        Everything after the files are written — manifest entries, WAP
-        staging, the batch ledger, the commit and the lineage row — is
-        shared by both paths.
+        Both placements hash the bucket key with ``F.hash`` before the
+        kernel; the hashes give each bucket's file its key bloom. Everything
+        after the files are written — manifest entries, WAP staging, the
+        batch ledger, the commit and the lineage row — is shared.
 
-        ``post_dedup_transform`` (optional DataFrame → DataFrame) runs on the
-        *deduped* rows — the right place for normalization UDFs: it touches
-        one row per key instead of every change image, and rides the dedup
-        shuffle's output partitions (no extra exchange). The driver path
-        needs its Arrow form: an object with ``arrow(table)`` and the
-        ``columns`` it rewrites (``CdcPipeline``'s transform); any other
-        transform, or one that rewrites a bucket column, takes the Spark
-        path.
+        ``post_dedup_transform`` (optional) runs on the *deduped* rows — the
+        right place for normalization UDFs: it touches one row per key
+        instead of every change image. It is an object with
+        ``arrow(table)`` and the ``columns`` it rewrites (``CdcPipeline``'s
+        ``PostDedupTransform``). It must leave the bucket columns alone
+        (``ValueError`` otherwise): the kernel buckets rows by the hash
+        taken before the transform.
 
         ``wap_id`` switches the merge into WRITE-AUDIT-PUBLISH mode (the
         Iceberg ``wap.id`` staged-commit workflow): all cluster work runs
@@ -1399,6 +1457,14 @@ class LakeTable:
         # needs the resolved table listing, so merge-path driver memory is
         # O(batch) regardless of how many live files the table has.
         commit = self.commit_at(resolve=False)
+        clash = set(commit.bucket_cols) & set(
+            post_dedup_transform.columns if post_dedup_transform else ()
+        )
+        if clash:
+            raise ValueError(
+                f"post_dedup_transform rewrites bucket columns {sorted(clash)}: "
+                "rows are bucketed by the key hash taken before the transform"
+            )
         if commit.is_applied(batch_id):
             return {"skipped": True, "batch_id": batch_id}
 
@@ -1444,18 +1510,9 @@ class LakeTable:
         attempt_tag = uuid.uuid4().hex[:8]
         rel_dir = os.path.join("data", f"b{batch_tag}_{attempt_tag}")
         out_dir = os.path.join(self.root, rel_dir)
-        if self._merges_in_driver(batch_df, commit, post_dedup_transform):
-            obs, key_hashes = self._write_delta_in_driver(
-                batch_df, columns, event_ts, commit, post_dedup_transform, out_dir
-            )
-        else:
-            obs = self._write_delta_with_spark(
-                spark, batch_df, columns, event_ts, commit, dedup_strategy,
-                post_dedup_transform, out_dir,
-            )
-            key_hashes = None
-
-        types = dict(commit.schema)
+        placement, obs, key_hashes = self._write_delta(
+            batch_df, columns, event_ts, commit, post_dedup_transform, out_dir
+        )
         delta = self._walk_written(
             out_dir, rel_dir, "delta",
             # VALUE-column stats on deltas (key stats would be useless —
@@ -1463,7 +1520,6 @@ class LakeTable:
             # time-like stats_col is narrow per batch): read_where()'s
             # candidate phase prunes these files at the listing level
             key_stats_cols=list(commit.stats_cols) or None,
-            key_bloom_cols=[(c, types[c]) for c in commit.bucket_cols],
             key_hashes=key_hashes,
         )
         touched = sorted(int(b) for b in delta)
@@ -1479,9 +1535,7 @@ class LakeTable:
                 "ingest_lag_s": round(now - obs["event_ts_max"], 3),
                 "ingest_lag_oldest_s": round(now - obs["event_ts_min"], 3),
             }
-        n_in = obs["rows_in"]
-        n_out = obs["rows"] or 0
-        n_del = obs["deletes"] or 0
+        n_in, n_out, n_del = obs["rows_in"], obs["rows"], obs["deletes"]
         lsn_min, lsn_max = obs["lsn_min"], obs["lsn_max"]
         metrics = {
             "batch_id": batch_id,
@@ -1489,12 +1543,13 @@ class LakeTable:
             "rows_in": n_in,
             "rows_after_dedup": n_out,
             "dedup_dropped": n_in - n_out,
-            "deletes": int(n_del),
-            "upserts": int(n_out - n_del),
+            "deletes": n_del,
+            "upserts": n_out - n_del,
             "lsn_min": lsn_min,
             "lsn_max": lsn_max,
             "buckets_touched": sorted(touched),
             "files_written": n_files,
+            "placement": placement,
             "wall_ms": None,  # filled below
             "skipped": False,
             **lag,
@@ -1585,67 +1640,31 @@ class LakeTable:
         self._append_metrics(metrics)
         return metrics
 
-    def _merges_in_driver(
-        self, batch_df: DataFrame, commit: Commit, transform
-    ) -> bool:
-        """True when ``merge`` should run the batch in the driver: the
-        optimizer's planning-only size estimate (no job; exact for a local
-        relation, the file bytes for a file source, unbounded for an RDD)
-        is under ``DRIVER_MERGE_MAX_BYTES``, and any post-dedup transform
-        has an Arrow form that leaves the bucket columns alone (the driver
-        path hashes the bucket key before the transform)."""
-        if transform is not None and (
-            not hasattr(transform, "arrow")
-            or set(transform.columns) & set(commit.bucket_cols)
-        ):
-            return False
+    @staticmethod
+    def _merges_in_driver(batch_df: DataFrame) -> bool:
+        """True when ``merge`` should run its kernel in the driver: the
+        optimizer's planning-only size estimate of the batch (no job; exact
+        for a local relation, the file bytes for a file source, unbounded
+        for an RDD) is under ``DRIVER_MERGE_MAX_BYTES``."""
         size = batch_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         return int(size) < DRIVER_MERGE_MAX_BYTES
 
-    def _write_delta_in_driver(
+    def _write_delta(
         self, batch_df, columns, event_ts, commit: Commit, transform, out_dir: str
-    ) -> tuple[dict[str, Any], dict[int, list[int]] | None]:
-        """The driver merge path: ONE Spark job collects the projected batch
-        with Arrow, carrying ``F.hash(bucket_cols)``; pyarrow then keeps the
-        max-lsn image per key, applies the transform's Arrow form, buckets
-        by ``pmod(hash, n_buckets)`` and writes one file per bucket under
-        ``out_dir/_bucket=k/``. Returns the merge observation (the same keys
-        the Spark path observes) and each bucket's key hashes for its bloom
-        (None when the bucket-key types are not driver-hashable)."""
-        import numpy as np
+    ) -> tuple[str, dict[str, Any], dict[int, list[int] | None]]:
+        """Write the batch's delta files under ``out_dir/_bucket=k/`` with
+        ``_merge_kernel``, in the driver or in the executors
+        (``_merges_in_driver``); either way one Spark action. Returns the
+        placement, the merge observation folded from the kernel's metadata
+        rows, and each bucket's key hashes (None above the bloom cap or for
+        bucket-key types the driver cannot hash)."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
         from .bucketing import HASHABLE_KEY_TYPES
 
         types = dict(commit.schema)
-        hashable = all(types[c].lower() in HASHABLE_KEY_TYPES for c in commit.bucket_cols)
-        # the lag bound reads the UNPROJECTED batch (like the Spark path's
-        # observation): after a rename or drop of ``lag_col`` the feed still
-        # ships it, but the projection no longer holds it
-        lag = [] if event_ts is None else [event_ts.alias("_event_ts")]
-        t = (
-            batch_df.select(*columns, *lag)
-            .select("*", F.hash(*commit.bucket_cols).alias("_h"))
-            .toArrow()
-        )
-        obs: dict[str, Any] = {"rows_in": t.num_rows}
-        if event_ts is not None:
-            mm = pc.min_max(t["_event_ts"])
-            obs["event_ts_min"], obs["event_ts_max"] = mm["min"].as_py(), mm["max"].as_py()
-        t = _last_images(t, list(commit.key_cols))
-        mm = pc.min_max(t[SYS_LSN])
-        obs.update(
-            rows=t.num_rows,
-            deletes=pc.sum(pc.cast(t[SYS_DELETED], pa.int64())).as_py(),
-            lsn_min=mm["min"].as_py(),
-            lsn_max=mm["max"].as_py(),
-        )
-        if transform is not None:
-            t = transform.arrow(t)
-        hashes = t["_h"].to_numpy()
-        buckets = np.mod(hashes.astype(np.int64), commit.n_buckets)
         # the declared columns, then the system columns, all nullable: the
         # schema Spark's writer gives the same rows
         file_schema = (
@@ -1653,102 +1672,49 @@ class LakeTable:
             .append(pa.field(SYS_LSN, pa.int64()))
             .append(pa.field(SYS_DELETED, pa.bool_()))
         )
-        t = t.select(file_schema.names).cast(file_schema)
-        os.makedirs(out_dir)
-        key_hashes: dict[int, list[int]] = {}
-        attempt = uuid.uuid4()
-        for b in np.unique(buckets).tolist():
-            rows = np.flatnonzero(buckets == b)
-            key_hashes[b] = hashes[rows].tolist()
-            bucket_dir = os.path.join(out_dir, f"_bucket={b}")
-            os.makedirs(bucket_dir)
-            _write_lake_parquet(
-                t.take(rows),
-                os.path.join(bucket_dir, f"part-{b:05d}-{attempt}.c000.zstd.parquet"),
-            )
-        return obs, (key_hashes if hashable else None)
-
-    def _write_delta_with_spark(
-        self, spark, batch_df, columns, event_ts, commit: Commit,
-        dedup_strategy: str, transform, out_dir: str,
-    ) -> dict[str, Any]:
-        """The Spark merge path: project → exchange + dedup → transform →
-        ``partitionBy("_bucket")`` write to ``out_dir``, one job. Returns the
-        merge observation, taken from ``Observation``s on that job."""
-        from pyspark.sql import Observation
-
-        # Observations piggyback on the write job — merge stays a single
-        # pass (no separate count()/agg() jobs).
-        obs_in = Observation()
-        obs_out = Observation()
-        in_aggs = [F.count(F.lit(1)).alias("rows_in")]
-        if event_ts is not None:
-            in_aggs += [
-                F.min(event_ts).alias("event_ts_min"),
-                F.max(event_ts).alias("event_ts_max"),
-            ]
-        projected = batch_df.observe(obs_in, *in_aggs).select(*columns)
-        # Two exchange strategies, both ending bucket-aligned (partition id ==
-        # pmod(murmur3(bucket_cols), n_buckets) == _bucket, so the final
-        # partitionBy("_bucket") write needs no further repartition):
-        #
-        # * default ('window'/'max_by'): ONE exchange — an explicit
-        #   repartition(n_buckets, bucket_cols) that the dedup rides
-        #   (bucket_cols ⊆ key_cols satisfies its required distribution, so
-        #   Catalyst elides the dedup's own exchange). Every raw row image
-        #   crosses the wire once.
-        # * 'max_by_partial': the dedup aggregates FIRST on its own exchange —
-        #   Catalyst then plans a partial (map-side) aggregate, so duplicate
-        #   images of a key collapse inside each scan task and only partial
-        #   maxima cross the wire; a SECOND exchange bucket-aligns the
-        #   survivors (one row per key per batch). Two exchanges, but
-        #   exchange 1 shrinks by the within-task duplicate factor and
-        #   exchange 2 is O(distinct keys) — the winning trade whenever the
-        #   change feed revisits keys (hot-key/Zipf feeds, exactly where one
-        #   full-row exchange hurts most at 100 TB).
-        if dedup_strategy == "max_by_partial":
-            deduped = last_image_wins(
-                projected,
-                key_cols=commit.key_cols,
-                order_col=SYS_LSN,
-                strategy="max_by",
-            ).repartition(commit.n_buckets, *commit.bucket_cols)
-        else:
-            clustered = projected.repartition(commit.n_buckets, *commit.bucket_cols)
-            deduped = last_image_wins(
-                clustered,
-                key_cols=commit.key_cols,
-                order_col=SYS_LSN,
-                strategy=dedup_strategy,
-            )
-        deduped = deduped.observe(
-            obs_out,
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col(SYS_DELETED).cast("int")).alias("deletes"),
-            F.min(SYS_LSN).alias("lsn_min"),
-            F.max(SYS_LSN).alias("lsn_max"),
+        kernel = functools.partial(
+            _merge_kernel,
+            key_cols=list(commit.key_cols),
+            n_buckets=commit.n_buckets,
+            file_schema=file_schema,
+            transform=transform,
+            out_dir=out_dir,
+            hashable=all(types[c].lower() in HASHABLE_KEY_TYPES for c in commit.bucket_cols),
         )
-        if transform is not None:
-            deduped = transform(deduped)
-        with_bucket = deduped.withColumn("_bucket", self._bucket_expr(commit))
-        # No repartition here: the batch is already clustered on bucket_cols
-        # (single fused exchange), so partition id == _bucket and
-        # partitionBy writes exactly one file per bucket per commit.
-        _require_ts_micros(spark)
-        with_bucket.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-        try:
-            return {**obs_in.get, **obs_out.get}
-        except Exception:
-            # Catalyst folds an EMPTY sub-batch to a LocalRelation and
-            # prunes the CollectMetrics nodes, so Observation.get raises.
-            # Only that case may read as an empty observation; if data
-            # files WERE written, the failure is a real error — swallowing
-            # it would fabricate lineage — re-raise.
-            if os.path.isdir(out_dir) and any(
-                d.startswith("_bucket=") for d in os.listdir(out_dir)
-            ):
-                raise
-            return {"rows_in": 0, "rows": 0, "deletes": 0, "lsn_min": None, "lsn_max": None}
+        # the lag bound reads the UNPROJECTED batch: after a rename or drop
+        # of ``lag_col`` the feed still ships it, but the projection no
+        # longer holds it
+        lag = [] if event_ts is None else [event_ts.alias("_event_ts")]
+        projected = batch_df.select(*columns, *lag)
+        key_hash = F.hash(*commit.bucket_cols).alias("_h")
+        os.makedirs(out_dir)
+        if self._merges_in_driver(batch_df):
+            placement = "driver"
+            meta = kernel(projected.select("*", key_hash).toArrow())
+        else:
+            placement = "executor"
+
+            def run(batches):
+                batches = list(batches)
+                if batches:
+                    yield from kernel(pa.Table.from_batches(batches)).to_batches()
+
+            # partition id == pmod(F.hash(bucket_cols), n_buckets) == bucket:
+            # one task per bucket, which holds that bucket's images in memory
+            # (the batch / n_buckets, more for a hot bucket). The hash is
+            # taken after the exchange, so it is not shuffled.
+            meta = (
+                projected.repartition(commit.n_buckets, *commit.bucket_cols)
+                .select("*", key_hash)
+                .mapInArrow(run, from_arrow_schema(_merge_meta_schema()))
+                .toArrow()
+            )
+        obs = {k: pc.sum(meta[k]).as_py() or 0 for k in ("rows_in", "rows", "deletes")}
+        for k in ("lsn", "event_ts"):
+            obs[f"{k}_min"] = pc.min(meta[f"{k}_min"]).as_py()
+            obs[f"{k}_max"] = pc.max(meta[f"{k}_max"]).as_py()
+        key_hashes = dict(zip(meta["bucket"].to_pylist(), meta["key_hashes"].to_pylist()))
+        return placement, obs, key_hashes
 
     def merge_partial(
         self,
@@ -1757,7 +1723,6 @@ class LakeTable:
         batch_id: str | int,
         presence_col: str = "_present",
         op_col: str = "op",
-        dedup_strategy: str = "window",
         post_dedup_transform=None,
     ) -> dict[str, Any]:
         """MERGE a micro-batch of PARTIAL row images (binlog_row_image=
@@ -1833,7 +1798,6 @@ class LakeTable:
                 spark,
                 full,
                 batch_id,
-                dedup_strategy=dedup_strategy,
                 op_col="op",
                 post_dedup_transform=post_dedup_transform,
             )
@@ -2546,6 +2510,11 @@ class LakeTable:
         }
         row["buckets_touched"] = [json.dumps(metrics.get("buckets_touched"))]
         table = pa.table(row)
+        # where the merge kernel ran ("driver"/"executor"); a typed string
+        # column, so a heartbeat's NULL reads back with the merges' rows
+        table = table.append_column(
+            "placement", pa.array([metrics.get("placement")], type=pa.string())
+        )
         # event-time lag stamps (merge(lag_col=...)): explicit float64 so a
         # row without them (heartbeats, lag-less merges) still writes a
         # typed column — a null-typed parquet column would clash on read

@@ -58,7 +58,6 @@ def refresh_aggregate(
     since_lsn: int,
     to_lsn: int,
     batch_id: str,
-    dedup_strategy: str = "window",
     prev_version: int | None = None,
     version: int | None = None,
     since_version: int | None = None,
@@ -159,12 +158,7 @@ def refresh_aggregate(
             *[F.lit(None).alias(c) for c in value_cols],
             F.lit(stamp).cast("long").alias("source_lsn"),
         )
-        metrics = agg_table.merge(
-            spark,
-            upserts.unionByName(gone),
-            batch_id,
-            dedup_strategy=dedup_strategy,
-        )
+        metrics = agg_table.merge(spark, upserts.unionByName(gone), batch_id)
     finally:
         dirty.unpersist()
     if not metrics.get("skipped"):

@@ -28,6 +28,8 @@ import struct
 
 import numpy as np
 
+from .containers import _unpack
+
 __all__ = ["decode_jpeg", "encode_jpeg"]
 
 
@@ -230,7 +232,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
             break
         if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
             continue  # standalone
-        seg_len = struct.unpack_from(">H", payload, pos)[0]
+        seg_len = _unpack(">H", payload, pos, len(payload), "JPEG segment length")[0]
         seg = payload[pos + 2 : pos + seg_len]
         if marker == 0xDB:  # DQT
             p = 0
@@ -258,12 +260,12 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 huff[(tc, th)] = dec
                 huffv[(tc, th)] = values
         elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 baseline
-            prec, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
+            prec, h, w, nc = _unpack(">BHHB", seg, 0, len(seg), "SOF header")
             if prec != 8:
                 raise NotImplementedError("only 8-bit precision")
             comps = []
             for i in range(nc):
-                cid, hv, tq = struct.unpack_from(">BBB", seg, 6 + 3 * i)
+                cid, hv, tq = _unpack(">BBB", seg, 6 + 3 * i, len(seg), "SOF component")
                 comps.append(
                     {"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq}
                 )
@@ -275,10 +277,12 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 "(progressive/arithmetic/hierarchical)"
             )
         elif marker == 0xDD:  # DRI
-            restart_interval = struct.unpack_from(">H", seg, 0)[0]
+            restart_interval = _unpack(">H", seg, 0, len(seg), "DRI segment")[0]
         elif marker == 0xDA:  # SOS: one scan's header + entropy data
             if frame is None:
                 raise ValueError("SOS before SOF")
+            if not seg or len(seg) < 1 + 2 * seg[0]:
+                raise ValueError(f"torn SOS header at {pos}")
             ns = seg[0]
             scan = {}
             for i in range(ns):

@@ -118,7 +118,6 @@ class MultiSourceIngest:
         self,
         spark: SparkSession,
         state_path: str,
-        dedup_strategy: str = "max_by",
     ) -> dict[str, Any]:
         """One fleet-wide drain: read every shard past its watermark, merge
         as ONE batch, advance + persist the GtidSet after the commit.
@@ -151,12 +150,7 @@ class MultiSourceIngest:
             return {"skipped": True, "gtid_executed": gtid.to_string()}
         batch_id = f"msrc:{new_gtid.to_string()}"
 
-        metrics = self.table.merge(
-            spark,
-            union.drop("_source", "_source_lsn"),
-            batch_id,
-            dedup_strategy=dedup_strategy,
-        )
+        metrics = self.table.merge(spark, union.drop("_source", "_source_lsn"), batch_id)
         new_gtid.save(state_path)  # state strictly after data (crash ⇒ replay)
         metrics["gtid_executed"] = new_gtid.to_string()
         return metrics
@@ -168,7 +162,6 @@ class MultiSourceIngest:
         checkpoint_root: str,
         state_path: str,
         max_files_per_trigger: int = 4,
-        dedup_strategy: str = "max_by",
         concurrent: bool = True,
     ) -> dict[str, Any]:
         """Streaming drain: one availableNow Structured Streaming query per
@@ -207,9 +200,7 @@ class MultiSourceIngest:
                     F.concat(F.lit(f"{_src}/"), F.col("binlog_file")).alias("binlog_file"),
                     "binlog_pos",
                 )
-                m = self.table.merge(
-                    spark, shifted, f"{_src}:{epoch_id}", dedup_strategy=dedup_strategy
-                )
+                m = self.table.merge(spark, shifted, f"{_src}:{epoch_id}")
                 if m.get("skipped"):
                     # replayed epoch whose merge the commit log skipped (a
                     # prior crash landed the data but not the checkpoint):

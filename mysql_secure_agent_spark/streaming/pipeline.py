@@ -13,8 +13,8 @@ The Spark re-expression of the reference's ``Updater.update()`` loop
   arity-mismatch → re-poll info-schema →      explicit DDL events; micro-batch is
   emit tableDefinition (Updater.java:188-217) split at each DDL lsn; ALTER applied
                                               between sub-batches (transactional)
-  sequential order ⇒ last image wins          row_number/max_by dedup per key on
-                                              source_lsn (operators.dedup_changelog)
+  sequential order ⇒ last image wins          max-source_lsn image per key
+                                              (LakeTable.merge's merge kernel)
   (no skew handling — 1 thread)               salted repartition before the
                                               normalize pandas-UDF stage
 
@@ -41,10 +41,13 @@ from ..schemas import CHANGELOG_SCHEMA, RAW_CHANGELOG_SCHEMA
 
 class PostDedupTransform:
     """The pipeline's post-dedup stage — normalize ``text``, then anonymize
-    the ``hashed`` columns — in the two forms ``LakeTable.merge`` runs:
-    called on a Spark DataFrame (the Spark merge path, SCD-2 history) and
-    ``arrow(table)`` on a pyarrow table (the driver merge path). Both apply
-    the same functions in the same order, so they write the same bytes."""
+    the ``hashed`` non-key columns — in two forms: ``arrow(table)`` on a
+    pyarrow table (``LakeTable.merge``'s kernel, in either placement) and
+    called on a Spark DataFrame (SCD-2 history images). Both apply the same
+    functions in the same order, so they write the same bytes. Hashed key
+    columns are anonymized before the dedup instead
+    (``CdcPipeline._prepare``): merge buckets rows by the key hash taken
+    before this transform."""
 
     def __init__(self, normalize: bool, hashed: list[str], salt: str):
         self.normalize = normalize
@@ -85,7 +88,6 @@ class CdcPipeline:
         feed_dir: str,
         normalize: bool = True,
         salt_buckets: int = 8,
-        dedup_strategy: str = "window",
         compact_every: int = 0,  # 0 = never auto-compact (merge-count cadence)
         # size-triggered compaction (reference: 1 GiB flush policy,
         # BucketOutput.java:29-30): {"max_delta_bytes": ..., "max_deltas": ...}
@@ -167,7 +169,6 @@ class CdcPipeline:
         self.feed_dir = feed_dir
         self.normalize = normalize
         self.salt_buckets = salt_buckets
-        self.dedup_strategy = dedup_strategy
         self.compact_every = compact_every
         self.compact_policy = compact_policy
         self.raw = raw or raw_schema is not None
@@ -281,28 +282,41 @@ class CdcPipeline:
         hot path the north star salts: a Zipf-hot conversation's images all
         hash to one partition, so repartition on (conv_id, salt) before the
         Arrow-vectorized decode UDF spreads them. For an already-decoded feed
-        there is no pre-dedup map stage — dedup's map-side combine handles
-        skew — so this is a no-op."""
+        there is no pre-dedup map stage, so only the column selection and the
+        key anonymization below apply.
+
+        Config-hashed KEY columns are anonymized here, before the dedup, not
+        in the post-dedup transform: merge buckets rows by the hash of the
+        key as it reaches the merge. Anonymization is per value, so equal
+        keys stay equal and each key's winning image is unchanged."""
         if self.min_lsn_exclusive:
             # prune the promotion overlap before anything shuffles or decodes
             batch_df = batch_df.filter(
                 F.col("source_lsn") > F.lit(self.min_lsn_exclusive)
             )
-        if not self.raw:
-            return self._apply_selection(batch_df)
-        from ..functions.decode import decode_raw_feed, decode_raw_feed_typed
+        decoded = batch_df
+        if self.raw:
+            from ..functions.decode import decode_raw_feed, decode_raw_feed_typed
 
-        n = spark.sparkContext.defaultParallelism
-        # conv_id is inside the encoded payload, so pre-decode salting keys on
-        # the log position alone (pure spread; decode needs no key locality).
-        keys = ["conv_id"] if "conv_id" in batch_df.columns else []
-        salted = salted_repartition(
-            batch_df, key_cols=keys, n_partitions=n, salt_buckets=self.salt_buckets
-        )
-        if self.raw_schema is not None:
-            return self._apply_selection(decode_raw_feed_typed(salted, self.raw_schema))
-        return self._apply_selection(
-            decode_raw_feed(salted, quarantine=self._dlq is not None)
+            n = spark.sparkContext.defaultParallelism
+            # conv_id is inside the encoded payload, so pre-decode salting
+            # keys on the log position alone (pure spread; decode needs no
+            # key locality).
+            keys = ["conv_id"] if "conv_id" in batch_df.columns else []
+            salted = salted_repartition(
+                batch_df, key_cols=keys, n_partitions=n, salt_buckets=self.salt_buckets
+            )
+            if self.raw_schema is not None:
+                decoded = decode_raw_feed_typed(salted, self.raw_schema)
+            else:
+                decoded = decode_raw_feed(salted, quarantine=self._dlq is not None)
+        selected = self._apply_selection(decoded)
+        hashed = self._hashed_columns()
+        if not hashed:
+            return selected
+        key_cols = self.table.commit_at(resolve=False).key_cols
+        return anonymize(
+            selected, [c for c in hashed if c in key_cols], self.config.crypto_salt
         )
 
     def _apply_selection(self, df: DataFrame) -> DataFrame:
@@ -328,19 +342,21 @@ class CdcPipeline:
                 out = out.withColumn("_present", F.array_remove("_present", c))
         return out
 
-    def _post_dedup(self) -> "PostDedupTransform | None":
-        """Normalization + anonymization run AFTER dedup: one row per key
-        instead of every change image, riding the dedup shuffle's partitions
-        (no extra exchange). Final table content is identical — the winning
-        image is chosen by source_lsn alone.
+    def _hashed_columns(self) -> list[str]:
+        """Anonymization (P4): the config-flagged columns that get
+        base64(sha1(salt ∥ value)), matching the reference's import-time
+        hashing (Updater.java:103-112) with its golden vectors."""
+        if self._table_cfg is None:
+            return []
+        cols = [n for n, _ in self.table.commit_at(resolve=False).schema]
+        return self._table_cfg.hashed_columns(cols)
 
-        Anonymization (P4): base64(sha1(salt ∥ value)) on config-flagged
-        columns, matching the reference's import-time hashing
-        (Updater.java:103-112) with its golden vectors."""
-        hashed: list[str] = []
-        if self._table_cfg is not None:
-            cols = [n for n, _ in self.table.commit_at(resolve=False).schema]
-            hashed = self._table_cfg.hashed_columns(cols)
+    def _post_dedup(self) -> "PostDedupTransform | None":
+        """Normalization + anonymization of non-key columns run AFTER dedup:
+        one row per key instead of every change image. Final table content
+        is identical — the winning image is chosen by source_lsn alone."""
+        key_cols = self.table.commit_at(resolve=False).key_cols
+        hashed = [c for c in self._hashed_columns() if c not in key_cols]
         if not self.normalize and not hashed:
             return None
         salt = self.config.crypto_salt if self.config else ""
@@ -391,17 +407,12 @@ class CdcPipeline:
         def do_merge(part: DataFrame, bid: str) -> dict[str, Any]:
             if self._partial:
                 return self.table.merge_partial(
-                    spark,
-                    part,
-                    bid,
-                    dedup_strategy=self.dedup_strategy,
-                    post_dedup_transform=post,
+                    spark, part, bid, post_dedup_transform=post
                 )
             out = self.table.merge(
                 spark,
                 part,
                 bid,
-                dedup_strategy=self.dedup_strategy,
                 post_dedup_transform=post,
                 # per-batch replication-lag stamps in the lineage metrics
                 # (commit wall time minus event-time bounds) — the CDC SLO

@@ -16,10 +16,11 @@ def spark():
     yield s
 
 
-# LakeTable.merge runs a small batch in the driver and a large one as a
-# Spark write job. The merge-heavy modules below run once per path: as
-# collected, with every merge forced into the driver, and again through
-# test_spark_merge_path.py, with every merge forced onto the Spark job.
+# LakeTable.merge runs its merge kernel in the driver for a small batch and
+# in the executors for a large one. The merge-heavy modules below run once
+# per placement: as collected, with every merge forced into the driver, and
+# again through test_spark_merge_path.py, with every merge forced into the
+# executor placement.
 MERGE_PATH_MODULES = {"test_cdc_replay", "test_changefeed", "test_key_bloom", "test_wap"}
 
 

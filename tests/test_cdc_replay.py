@@ -8,6 +8,7 @@ ORDER BY conv_id, turn_idx).
 """
 
 import shutil
+import time
 
 import pandas as pd
 import pytest
@@ -66,13 +67,12 @@ def test_backfill_matches_oracle(spark, tmp_path, spec):
     _assert_matches_oracle(spark, table, spec)
 
 
-@pytest.mark.parametrize("dedup_strategy", ["window", "max_by", "max_by_partial"])
-def test_stream_matches_oracle(spark, tmp_path, dedup_strategy):
+def test_stream_matches_oracle(spark, tmp_path):
     spec = FeedSpec(n_events=6000, n_convs=200, seed=23)
     feed = str(tmp_path / "feed")
     write_feed(spec, feed, n_files=5)
     table = _make_table(str(tmp_path / "tbl"))
-    pipe = CdcPipeline(table, feed, dedup_strategy=dedup_strategy)
+    pipe = CdcPipeline(table, feed)
     pipe.run_stream(spark, str(tmp_path / "ckpt"))
     _assert_matches_oracle(spark, table, spec)
 
@@ -163,54 +163,50 @@ def test_spark_native_generator_valid_and_replays(spark, tmp_path):
     )
 
 
-def test_merge_plan_single_exchange(spark, tmp_path):
-    """The merge's physical plan must contain exactly ONE shuffle: the
-    bucket/key clustering. Dedup and the bucket-partitioned write ride it."""
-    from pyspark.sql import functions as F
-    from mysql_secure_agent_spark.operators.dedup_changelog import last_image_wins
+def test_merge_plan_single_exchange(spark, tmp_path, monkeypatch):
+    """An executor-placement merge is ONE Spark job whose plan has ONE
+    exchange: the repartition on the bucket key. Dedup, transform and the
+    per-bucket writes all run in the merge kernel's tasks behind it. AQE
+    submits each exchange's map stage as a job of its own, so the job
+    count is taken with AQE off."""
+    from mysql_secure_agent_spark.lake import table as table_mod
 
+    monkeypatch.setattr(table_mod, "DRIVER_MERGE_MAX_BYTES", 0)
     table = _make_table(str(tmp_path / "tbl"))
-    commit = table.commit_at()
     spec = FeedSpec(n_events=500, n_convs=20, seed=3)
     cl, _ = generate_changelog(spec)
-    df = spark.createDataFrame(cl)
-    projected = df.select(
-        *[c for c, _ in commit.schema], F.col("source_lsn"),
-        (F.col("op") == "D").alias("_deleted"),
-    )
-    clustered = projected.repartition(commit.n_buckets, *commit.bucket_cols)
-    deduped = last_image_wins(clustered, commit.key_cols, strategy="window")
-    plan = (
-        deduped.withColumn("_bucket", table._bucket_expr(commit))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("Exchange") == 1
+    batch = spark.createDataFrame(cl)
+    plans = []
+    to_arrow = type(batch).toArrow
 
+    def spy(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return to_arrow(df)
 
-def test_merge_plan_partial_agg_strategy(spark, tmp_path):
-    """'max_by_partial': the dedup aggregate plans a map-side partial pass
-    (duplicate key images collapse before the wire) and the bucket-aligning
-    exchange carries only the aggregated survivors — two exchanges total."""
-    from pyspark.sql import functions as F
-    from mysql_secure_agent_spark.operators.dedup_changelog import last_image_wins
-
-    table = _make_table(str(tmp_path / "tbl"))
-    commit = table.commit_at()
-    spec = FeedSpec(n_events=500, n_convs=20, seed=3)
-    cl, _ = generate_changelog(spec)
-    df = spark.createDataFrame(cl)
-    projected = df.select(
-        *[c for c, _ in commit.schema], F.col("source_lsn"),
-        (F.col("op") == "D").alias("_deleted"),
-    )
-    deduped = last_image_wins(projected, commit.key_cols, strategy="max_by")
-    aligned = deduped.repartition(commit.n_buckets, *commit.bucket_cols)
-    plan = (
-        aligned.withColumn("_bucket", table._bucket_expr(commit))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("Exchange") == 2
-    assert "partial_max" in plan or "partial" in plan.lower()
+    monkeypatch.setattr(type(batch), "toArrow", spy)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup("executor-merge", "one executor-placement merge")
+        m = table.merge(spark, batch, "b0")
+        # a later job in another group: once the listener has seen it, it
+        # has seen every job the merge submitted before it
+        sc.setJobGroup("executor-merge-control", "a job that must be recorded")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    for _ in range(100):
+        if tracker.getJobIdsForGroup("executor-merge-control"):
+            break
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup("executor-merge-control")
+    assert m["placement"] == "executor"
+    assert len(tracker.getJobIdsForGroup("executor-merge")) == 1
+    assert len(plans) == 1 and plans[0].count("Exchange") == 1
+    _assert_matches_oracle(spark, table, spec)
 
 
 def test_kill_resume_exactly_once(spark, tmp_path):

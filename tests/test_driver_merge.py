@@ -1,21 +1,23 @@
-"""LakeTable.merge's two execution paths write the same table.
+"""LakeTable.merge's two placements of its merge kernel write the same table.
 
-Small batches merge in the driver (one Arrow collect, then pyarrow dedup,
-bucketing and per-bucket parquet writes); large ones run the Spark write
-job. Each test forces each path by setting ``DRIVER_MERGE_MAX_BYTES`` to 0
-(Spark) and to 1 << 40 (driver), runs the same seeded batch sequence on a
-fresh table per path, and checks: equal ``read()`` (values and dtypes),
-equal manifest entries apart from ``path`` and ``bytes`` (blooms, key stats
-and lsn ranges included), and a clean deep ``fsck.verify``. Batches are
-built from Arrow tables, so their size estimate is exact and small.
+Small batches run the kernel in the driver (one Arrow collect, then pyarrow
+dedup, bucketing and per-bucket parquet writes); large ones run it in the
+executors, one task per bucket. Each test forces each placement by setting
+``DRIVER_MERGE_MAX_BYTES`` to 0 (executor) and to 1 << 40 (driver), runs the
+same seeded batch sequence on a fresh table per placement, and checks:
+equal ``read()`` (values and dtypes), equal manifest entries apart from
+``path`` and ``bytes`` (blooms, key stats and lsn ranges included), a clean
+deep ``fsck.verify``, and the placement each merge recorded in its lineage
+row. Batches are built from Arrow tables, so their size estimate is exact
+and small.
 """
 
 import datetime as dt
+import os
 import random
 import time
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 import pyspark.sql.types as T
 import pytest
 from pyspark.sql import functions as F
@@ -37,7 +39,7 @@ SCHEMA = T.StructType(
     ]
 )
 KEY = ["conv_id", "turn_idx"]
-PATHS = {"spark": 0, "driver": 1 << 40}
+PLACEMENTS = {"executor": 0, "driver": 1 << 40}
 T0 = dt.datetime(2026, 3, 1, tzinfo=dt.timezone.utc)
 
 
@@ -82,16 +84,9 @@ def _entries(tbl):
     }
 
 
-def _spark_written(tbl):
-    """Per file a merge wrote (under ``data/b{batch}_{attempt}``; rewrites
-    write under ``data/v{version}``): True if Spark's writer wrote it."""
-    out = set()
-    for es in tbl.commit_at().files.values():
-        for e in es:
-            if e["path"].startswith("data/b"):
-                md = pq.ParquetFile(f"{tbl.root}/{e['path']}").metadata.metadata or {}
-                out.add(b"org.apache.spark.version" in md)
-    return out
+def _placements(spark, tbl):
+    """The placements the table's merges recorded in their lineage rows."""
+    return {r["placement"] for r in tbl.metrics(spark).select("placement").collect()}
 
 
 def _rows(spark, tbl, read=None):
@@ -100,19 +95,19 @@ def _rows(spark, tbl, read=None):
 
 
 def _run_both(monkeypatch, tmp_path, scenario):
-    """Run ``scenario(root)`` once per path; return {path: its result}."""
+    """Run ``scenario(root)`` once per placement; return {placement: its result}."""
     out = {}
-    for name, cap in PATHS.items():
+    for name, cap in PLACEMENTS.items():
         monkeypatch.setattr(table_mod, "DRIVER_MERGE_MAX_BYTES", cap)
         out[name] = scenario(str(tmp_path / name))
     return out
 
 
 def _assert_equivalent(spark, tables):
-    a, b = tables["spark"], tables["driver"]
+    a, b = tables["executor"], tables["driver"]
     assert _rows(spark, a) == _rows(spark, b)
     assert _entries(a) == _entries(b)
-    assert _spark_written(a) <= {True} and _spark_written(b) <= {False}
+    assert _placements(spark, a) == {"executor"} and _placements(spark, b) == {"driver"}
     for t in (a, b):
         report = fsck.verify(t, spark, deep=True)
         assert report["ok"], report["errors"]
@@ -129,7 +124,10 @@ def test_batches_with_deletes(spark, tmp_path, monkeypatch, seed):
     out = _run_both(monkeypatch, tmp_path, scenario)
     _assert_equivalent(spark, {k: t for k, (t, _) in out.items()})
     lineage = [
-        {k: v for k, v in m.items() if k not in ("wall_ms", "ingest_lag_s", "ingest_lag_oldest_s")}
+        {
+            k: v for k, v in m.items()
+            if k not in ("wall_ms", "ingest_lag_s", "ingest_lag_oldest_s", "placement")
+        }
         for _, m in out.values()
     ]
     assert lineage[0] == lineage[1] and lineage[0]["deletes"] > 0
@@ -230,8 +228,7 @@ def test_compound_bucket_cols(spark, tmp_path, monkeypatch):
 
 
 def test_date_bucket_key(spark, tmp_path, monkeypatch):
-    """A DATE bucket key: both paths bloom the deltas (the Spark path from
-    the pyarrow ``datetime.date`` values, the driver path from ``F.hash``)
+    """A DATE bucket key: both placements bloom the deltas from ``F.hash``
     with the same bytes, and a lookup prunes by them."""
     schema = T.StructType(
         [
@@ -256,7 +253,7 @@ def test_date_bucket_key(spark, tmp_path, monkeypatch):
         return tbl
 
     tables = _run_both(monkeypatch, tmp_path, scenario)
-    a, b = tables["spark"], tables["driver"]
+    a, b = tables["executor"], tables["driver"]
     assert sorted(a.read(spark).collect()) == sorted(b.read(spark).collect())
     assert _entries(a) == _entries(b)
     assert all("key_bloom" in e for es in _entries(b).values() for e in es)
@@ -291,7 +288,7 @@ def test_wap_staged_merge(spark, tmp_path, monkeypatch):
         return tbl, staged
 
     out = _run_both(monkeypatch, tmp_path, scenario)
-    assert out["spark"][1] == out["driver"][1]
+    assert out["executor"][1] == out["driver"][1]
     _assert_equivalent(spark, {k: t for k, (t, _) in out.items()})
 
 
@@ -310,7 +307,7 @@ def test_non_utc_session_time_zone(spark, tmp_path, monkeypatch):
     finally:
         spark.conf.set("spark.sql.session.timeZone", zone)
     # stored instants are zone-independent: re-read under UTC
-    assert _rows(spark, tables["spark"]) == _rows(spark, tables["driver"])
+    assert _rows(spark, tables["executor"]) == _rows(spark, tables["driver"])
 
 
 def test_pipeline_apply_batch_with_normalize_and_hashed_column(spark, tmp_path, monkeypatch):
@@ -370,7 +367,7 @@ def test_driver_merge_runs_one_spark_job(spark, tmp_path):
         time.sleep(0.1)
     assert tracker.getJobIdsForGroup("driver-merge-control")
     assert len(tracker.getJobIdsForGroup("driver-merge")) == 1
-    assert _spark_written(tbl) == {False}
+    assert _placements(spark, tbl) == {"driver"}
 
 
 def test_transform_arrow_form_equals_spark_form(spark):
@@ -398,3 +395,114 @@ def test_transform_arrow_form_equals_spark_form(spark):
         "AnZXUjEr5i2a57kXUtI6dXftv+E=", "jUdn9gOx372QFiYR9zRyZp0VQEw=", None,
     ]
     assert got["text"][:3] == ["caf\u00e9", "abc", "a b"]
+
+
+def test_hot_key_batch(spark, tmp_path, monkeypatch):
+    """One key with 5,000 images in a batch (plus a few cold keys): the
+    whole hot key lands in one kernel call, whose max-lsn image wins."""
+    rng = random.Random(5)
+    rows = [
+        {"op": "U" if i else "I", "conv_id": "hot", "turn_idx": 0, "role": "user",
+         "n": i, "ts": T0 + dt.timedelta(seconds=i), "source_lsn": 10_000 + i}
+        for i in range(5000)
+    ]
+    rows += [
+        {"op": "I", "conv_id": f"c{i}", "turn_idx": rng.randrange(3), "role": None,
+         "n": -i, "ts": None, "source_lsn": 20_000 + i}
+        for i in range(40)
+    ]
+    rng.shuffle(rows)
+    cols = ["op", "conv_id", "turn_idx", "role", "n", "ts", "source_lsn"]
+
+    def scenario(root):
+        tbl = LakeTable.create(root, SCHEMA, KEY, n_buckets=4)
+        tbl.merge(spark, _frame(spark, rows, cols), "hot", lag_col="ts")
+        return tbl
+
+    tables = _run_both(monkeypatch, tmp_path, scenario)
+    _assert_equivalent(spark, tables)
+    hot = tables["executor"].lookup(spark, {"conv_id": "hot", "turn_idx": 0}).collect()
+    assert [r["n"] for r in hot] == [4999]
+
+
+@pytest.mark.parametrize("partition", ["whole batch", "one bucket"])
+def test_kernel_rerun_replaces_its_files(spark, tmp_path, partition):
+    """A retried or speculative task runs the kernel again on the same
+    partition into the same ``out_dir``: each bucket still holds exactly
+    one file, the metadata rows repeat, and no temp file is left behind.
+    The driver placement runs the kernel on the whole batch, the executor
+    placement on one bucket's partition."""
+    projected = _batch(spark, 3, 0).select(
+        "conv_id", "turn_idx", "role", "n", "ts", "source_lsn",
+        (F.col("op") == "D").alias("_deleted"),
+    )
+    if partition == "one bucket":
+        projected = projected.filter(F.pmod(F.hash("conv_id"), F.lit(4)) == 2)
+    t = projected.select("*", F.hash("conv_id").alias("_h")).toArrow()
+    file_schema = t.schema.remove(t.schema.get_field_index("_h"))
+    out_dir = str(tmp_path / "out")
+    runs = [
+        table_mod._merge_kernel(
+            t, key_cols=KEY, n_buckets=4, file_schema=file_schema,
+            transform=None, out_dir=out_dir, hashable=True,
+        )
+        for _ in range(2)
+    ]
+    assert runs[0].equals(runs[1]) and runs[0].num_rows >= 1
+    for b in runs[0]["bucket"].to_pylist():
+        names = os.listdir(os.path.join(out_dir, f"_bucket={b}"))
+        assert names == [f"part-{b:05d}.c000.zstd.parquet"]
+    assert sorted(os.listdir(out_dir)) == sorted(
+        f"_bucket={b}" for b in runs[0]["bucket"].to_pylist()
+    )
+
+
+def test_pipeline_with_hashed_key_column(spark, tmp_path, monkeypatch):
+    """``conv_id`` configured as hashed: the pipeline anonymizes the key
+    before the dedup, and the table equals the oracle's replay with
+    ``conv_id`` anonymized the same way."""
+    import pandas as pd
+
+    from mysql_secure_agent_spark import oracle
+    from mysql_secure_agent_spark.functions.anonymize import anonymize_arrow
+    from mysql_secure_agent_spark.sources.changelog import (
+        FeedSpec, generate_changelog, write_feed,
+    )
+
+    salt = "sodium chloride"
+    config = Config(
+        schemas={"main": SchemaConfig(tables={"transcripts": TableConfig(
+            columns={"conv_id": ColumnConfig(hash=True)})})},
+        crypto_salt=salt,
+    )
+    spec = FeedSpec(n_events=3000, n_convs=80, delete_frac=0.2, seed=41)
+    feed = str(tmp_path / "feed")
+    write_feed(spec, feed, n_files=3)
+
+    def scenario(root):
+        tbl = LakeTable.create(root, TRANSCRIPT_SCHEMA, PRIMARY_KEY, n_buckets=4)
+        pipe = CdcPipeline(tbl, feed, config=config)
+        assert "conv_id" not in pipe._post_dedup().columns
+        pipe.run_stream(spark, f"{root}-ckpt")
+        return tbl
+
+    tables = _run_both(monkeypatch, tmp_path, scenario)
+    _assert_equivalent(spark, tables)
+    cl, ddl = generate_changelog(spec)
+    expected = oracle.replay(cl, ddl)
+    expected["conv_id"] = anonymize_arrow(pa.chunked_array([expected["conv_id"]]), salt)
+    got = tables["executor"].read(spark).toPandas()
+    order = ["conv_id", "turn_idx"]
+    pd.testing.assert_frame_equal(
+        got.sort_values(order).reset_index(drop=True),
+        expected[got.columns.tolist()].sort_values(order).reset_index(drop=True),
+        check_dtype=False,
+    )
+
+
+def test_transform_on_bucket_column_is_refused(spark, tmp_path):
+    tbl = LakeTable.create(str(tmp_path / "t"), SCHEMA, KEY, n_buckets=4)
+    tr = PostDedupTransform(normalize=False, hashed=["conv_id"], salt="s")
+    with pytest.raises(ValueError, match="bucket columns"):
+        tbl.merge(spark, _batch(spark, 1, 0), "b0", post_dedup_transform=tr)
+    assert tbl.current_version() == 0

@@ -91,3 +91,27 @@ def test_erase_without_expire_leaves_history_and_says_so(spark, tmp_path):
     tbl.expire_versions(keep_last=1)
     tbl.vacuum()
     assert verify_erased(tbl, spark, [{"k": 7}]) == []
+
+
+def test_tombstone_merge_runs_in_the_driver(spark, tmp_path, monkeypatch):
+    """The tombstone frame is built from Arrow — a local relation with an
+    exact size estimate — so the tombstone merge of a few keys runs in the
+    driver placement. Forcing it into the executor placement gives the same
+    erase report."""
+    from pyspark.sql import functions as F
+
+    from mysql_secure_agent_spark.lake import table as table_mod
+
+    reports = {}
+    for placement, cap in {"executor": 0, "driver": table_mod.DRIVER_MERGE_MAX_BYTES}.items():
+        monkeypatch.setattr(table_mod, "DRIVER_MERGE_MAX_BYTES", cap)
+        tbl = _mk(spark, tmp_path / placement)
+        rep = erase_keys(tbl, spark, [{"k": 4}, {"k": 3}], batch_id="erase")
+        rep["compacted"].pop("wall_ms")
+        reports[placement] = rep
+        lineage = tbl.metrics(spark).filter(F.col("batch_id") == "erase").collect()
+        assert [(r["placement"], r["deletes"], r["lsn_max"] - r["lsn_min"]) for r in lineage] == [
+            (placement, 2, 1)
+        ]
+    assert reports["executor"] == reports["driver"]
+    assert reports["driver"]["erased"] and reports["driver"]["survivors"] == []

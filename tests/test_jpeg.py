@@ -133,3 +133,23 @@ def test_ff_fill_bytes_before_markers_are_legal():
     filled = data[:-2] + b"\xff\xff" + data[-2:]  # FF fill before EOI
     out = decode_jpeg(filled)
     assert (out == ref).all()
+
+
+def _before_sos(data: bytes) -> bytes:
+    return data[: data.find(b"\xff\xda")]
+
+
+@pytest.mark.parametrize(
+    "torn",
+    [
+        lambda j: j[:4],  # segment length cut after the marker
+        lambda j: j[:5],  # segment length cut mid-field
+        lambda j: b"\xff\xd8\xff\xc0\x00\x04\x08\x00",  # SOF0 with a 2-byte body
+        lambda j: b"\xff\xd8\xff\xdd\x00\x02",  # empty DRI
+        lambda j: _before_sos(j) + b"\xff\xda\x00\x02",  # empty SOS header
+    ],
+    ids=["len_cut_4", "len_cut_5", "short_sof0", "empty_dri", "empty_sos"],
+)
+def test_torn_headers_raise_valueerror(torn):
+    with pytest.raises(ValueError):
+        decode_jpeg(torn(encode_jpeg(_gradient(16, 16))))

@@ -32,14 +32,6 @@ nb = int(os.environ.get("CDC_BUCKETS", "64"))
 mpb = os.environ.get("CDC_MPB", "27m")
 codec = os.environ.get("CDC_CODEC", "zstd")
 arrow_batch = os.environ.get("CDC_ARROW_BATCH", "10000")
-# max_by_partial: the dedup aggregates on its own exchange, so Catalyst
-# plans a map-side partial aggregate — duplicate key images collapse inside
-# the scan tasks and only partial maxima cross the wire; a second exchange
-# bucket-aligns the (per-key) survivors. Measured on the 64M-event feed:
-# p16 CPU 299 vs 476 task-cpu-s against the single-exchange max_by (the
-# byte savings matter exactly when concurrent streams contend for memory
-# bandwidth), p4 within noise. Result-identical to window/max_by (tested).
-dedup = os.environ.get("CDC_DEDUP", "max_by_partial")
 
 os.environ["SPARK_DRIVER_MEMORY"] = mem
 # evlog dir is PER-PROCESS: event-log files restart stage IDs at 0, so a
@@ -91,12 +83,11 @@ spark = get_spark(
         # overhead on a posix dir listing the driver does in microseconds.
         "spark.sql.sources.parallelPartitionDiscovery.threshold": "4096",
         # AQE off for the merge job: the pipeline controls its partitioning
-        # explicitly (explicit repartition to n_buckets; dedup keys include
-        # turn_idx so Zipf-hot conversations already spread), so AQE
-        # contributes nothing here but two driver re-plan barriers per
-        # micro-batch (each query stage materializes as its own job) plus a
-        # coalesce of the dedup exchange to a non-multiple of the core count
-        # (22 tasks at p16 = 1.4 waves). Event-log A/B: per-rep inter-job
+        # explicitly (one repartition to n_buckets, one merge-kernel task
+        # per bucket), so AQE contributes nothing here but a driver re-plan
+        # barrier per micro-batch (each query stage materializes as its own
+        # job) plus a coalesce of the exchange to a non-multiple of the core
+        # count (22 tasks at p16 = 1.4 waves). Event-log A/B: per-rep inter-job
         # gap 1.2s -> 0.47s, one 3-stage job per batch. General sessions
         # (session.get_spark) keep AQE on — ad-hoc queries benefit.
         "spark.sql.adaptive.enabled": os.environ.get("CDC_AQE", "false"),
@@ -149,7 +140,7 @@ wc = os.path.join(work, f"warmck{cores}")
 shutil.rmtree(wt, ignore_errors=True)
 shutil.rmtree(wc, ignore_errors=True)
 wtbl = LakeTable.create(wt, TRANSCRIPT_SCHEMA, PRIMARY_KEY, n_buckets=nb, overwrite=True)
-CdcPipeline(wtbl, wfeed, normalize=True, dedup_strategy=dedup).run_stream(spark, wc)
+CdcPipeline(wtbl, wfeed, normalize=True).run_stream(spark, wc)
 shutil.rmtree(wt, ignore_errors=True)
 shutil.rmtree(wc, ignore_errors=True)
 
@@ -170,7 +161,7 @@ if os.environ.get("CDC_WARM_FULL", "1") == "1":
     ftbl = LakeTable.create(
         fwt, TRANSCRIPT_SCHEMA, PRIMARY_KEY, n_buckets=nb, overwrite=True
     )
-    CdcPipeline(ftbl, feed, normalize=True, dedup_strategy=dedup).run_stream(
+    CdcPipeline(ftbl, feed, normalize=True).run_stream(
         spark, fwc, max_files_per_trigger=mfpt
     )
     shutil.rmtree(fwt, ignore_errors=True)
@@ -203,7 +194,7 @@ for i in range(reps):
     table = LakeTable.create(
         tbl_dir, TRANSCRIPT_SCHEMA, PRIMARY_KEY, n_buckets=nb, overwrite=True
     )
-    pipe = CdcPipeline(table, feed, normalize=True, dedup_strategy=dedup)
+    pipe = CdcPipeline(table, feed, normalize=True)
     t0 = time.time()
     pipe.run_stream(spark, ck_dir, max_files_per_trigger=mfpt)
     t1 = time.time()

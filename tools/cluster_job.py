@@ -54,10 +54,6 @@ def main(argv: list[str] | None = None) -> int:
         help="skip the Arrow text-normalize stage",
     )
     p.add_argument(
-        "--dedup", default="max_by_partial",
-        choices=["window", "max_by", "max_by_partial"],
-    )
-    p.add_argument(
         "--metrics", action="store_true",
         help="print the per-batch lineage table after the run",
     )
@@ -81,12 +77,7 @@ def main(argv: list[str] | None = None) -> int:
             args.table, TRANSCRIPT_SCHEMA, PRIMARY_KEY, n_buckets=args.buckets
         )
 
-    pipe = CdcPipeline(
-        table,
-        args.feed,
-        normalize=not args.no_normalize,
-        dedup_strategy=args.dedup,
-    )
+    pipe = CdcPipeline(table, args.feed, normalize=not args.no_normalize)
     if args.continuous:
         out = pipe.run_stream_continuous(spark, args.checkpoint)
         print(out)

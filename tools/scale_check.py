@@ -1,19 +1,14 @@
-"""Scale-level correctness cross-check: two independent merge plans, one hash.
+"""Scale-level replay: one bench-scale feed through the pipeline, reduced
+to an order-insensitive content hash.
 
 The pandas oracle proves correctness at fixture scale; it cannot replay a
-10^8-event feed. This check closes that gap with plan diversity instead of
-a reference implementation: the SAME feed is applied through two materially
-different physical strategies —
-
-  * ``window``        — one exchange, row_number window dedup;
-  * ``max_by_partial``— map-side partial max_by aggregate, two exchanges;
-
-and the final table states are reduced to an order-insensitive content hash
-(xor of per-row hashes — commutative, so no global sort is needed). The
-plans share no dedup code path beyond the DataFrame API, so identical
-hashes at the bench scale is strong evidence the merge semantics (not just
-the small-scale fixtures) are right. Also prints per-run row counts and
-wall times.
+10^8-event feed. This script replays the feed once and reduces the final
+table state to a content hash (xor of per-row hashes — commutative, so no
+global sort is needed), with its row count, wall time, commit-JSON size
+and driver memory. Compare the hash across runs and engine versions. The
+merge has one implementation (``lake.table._merge_kernel``) in two
+placements; ``tests/test_driver_merge.py`` checks at fixture scale that
+both placements write the same table.
 
 Usage: python tools/scale_check.py [feed_dir] [n_events_if_generating]
 Defaults to the bench feed location; generates 6.4M events if absent.
@@ -72,9 +67,8 @@ def main() -> None:
 
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     run_maintainer = "--maintainer" in sys.argv
-    # --maintainer-only: skip the two-strategy replay (its 640M hash
-    # equality is already on record from the r4 rehearsal) and run just
-    # the maintainer phase against the given feed
+    # --maintainer-only: skip the full replay and run just the maintainer
+    # phase against the given feed
     maintainer_only = "--maintainer-only" in sys.argv
     run_maintainer = run_maintainer or maintainer_only
     feed = args[0] if args else "/dev/shm/cdc_bench_sf0.1/feed"
@@ -95,16 +89,16 @@ def main() -> None:
                 zipf_s=1.2, seed=42, strict_ops=False,
             )
 
-    out: dict[str, dict] = {}
-    for strategy in [] if maintainer_only else ["window", "max_by_partial"]:
-        tbl_dir = os.path.join(work, f"tbl_{strategy}")
-        ck_dir = os.path.join(work, f"ck_{strategy}")
+    replay = None
+    if not maintainer_only:
+        tbl_dir = os.path.join(work, "tbl")
+        ck_dir = os.path.join(work, "ck")
         shutil.rmtree(tbl_dir, ignore_errors=True)
         shutil.rmtree(ck_dir, ignore_errors=True)
         table = LakeTable.create(
             tbl_dir, TRANSCRIPT_SCHEMA, PRIMARY_KEY, n_buckets=64, overwrite=True
         )
-        pipe = CdcPipeline(table, feed, normalize=True, dedup_strategy=strategy)
+        pipe = CdcPipeline(table, feed, normalize=True)
         t0 = time.time()
         pipe.run_stream(spark, ck_dir, max_files_per_trigger=64)
         wall = time.time() - t0
@@ -113,7 +107,7 @@ def main() -> None:
         commit_path = os.path.join(
             tbl_dir, "_commits", f"v{head.version:08d}.json"
         )
-        out[strategy] = {
+        replay = {
             "rows": n,
             "hash": h,
             "wall_s": round(wall, 2),
@@ -122,11 +116,6 @@ def main() -> None:
         }
         shutil.rmtree(tbl_dir, ignore_errors=True)
         shutil.rmtree(ck_dir, ignore_errors=True)
-
-    match = maintainer_only or (
-        out["window"]["rows"] == out["max_by_partial"]["rows"]
-        and out["window"]["hash"] == out["max_by_partial"]["hash"]
-    )
 
     # Driver-memory + commit-metadata footprint: the merge path must stay
     # O(batch) in driver memory and O(MAX_MANIFESTS) in commit size no
@@ -152,8 +141,7 @@ def main() -> None:
         json.dumps(
             {
                 "feed": feed,
-                "strategies": out,
-                "state_match": match,
+                "replay": replay,
                 "maintainer": maintainer_out,
                 "driver_python_peak_rss_mb": py_rss_mb,
                 "driver_jvm_peak_rss_mb": jvm_hwm_mb,
@@ -161,7 +149,7 @@ def main() -> None:
         )
     )
     spark.stop()
-    ok = match and (maintainer_out is None or maintainer_out["index_match"])
+    ok = maintainer_out is None or maintainer_out["index_match"]
     sys.exit(0 if ok else 1)
 
 
@@ -199,10 +187,7 @@ def _maintainer_rehearsal(spark, feed: str, work: str) -> dict:
     table = LakeTable.create(
         tbl_dir, TRANSCRIPT_SCHEMA, PRIMARY_KEY, n_buckets=64, overwrite=True
     )
-    pipe = CdcPipeline(
-        table, os.path.dirname(stage), normalize=True,
-        dedup_strategy="max_by_partial",
-    )
+    pipe = CdcPipeline(table, os.path.dirname(stage), normalize=True)
     # Uneven split ON PURPOSE: bulk first, a small tail as the delta. A
     # half/half split makes the "delta" the size of the table, where a
     # full rebuild legitimately wins (measured: 13.2 s incremental vs
@@ -269,7 +254,7 @@ def _maintainer_rehearsal(spark, feed: str, work: str) -> dict:
             F.lit(hwm) + F.monotonically_increasing_id() + 1,
         )
     )
-    table.merge(spark, sample, "tinydelta.1", dedup_strategy="max_by_partial")
+    table.merge(spark, sample, "tinydelta.1")
     t0 = time.time()
     m3 = idx.refresh(spark)
     out["tiny_delta_wall_s"] = round(time.time() - t0, 2)
